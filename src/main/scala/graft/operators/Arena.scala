@@ -68,16 +68,18 @@ object Arena {
     val rows = matrix
       .select(col("a"), col("b"), col("wins_a").cast("long"), col("wins_b").cast("long"))
       .collect()
+    // a null win count is no decided game for that side: 0 wins
+    def wins(r: org.apache.spark.sql.Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     // symmetric decided-games view: (i, j, w_i, n_ij) both directions
     val sym = rows.flatMap { r =>
-      val (a, b, wa, wb) = (r.get(0), r.get(1), r.getLong(2), r.getLong(3))
+      val (a, b, wa, wb) = (r.get(0), r.get(1), wins(r, 2), wins(r, 3))
       val ng = wa + wb
       if (ng > 0) Seq((a, b, wa, ng), (b, a, wb, ng)) else Seq.empty
     }
-    val keys = sym.map(_._1).distinct.sortBy(_.toString)
-    val wi = keys.map(k => k -> sym.filter(_._1 == k).map(_._3).sum.toDouble).toMap
-    val games = keys.map(k => k -> sym.filter(_._1 == k).map(_._4).sum).toMap
-    val byI = keys.map(k => k -> sym.filter(_._1 == k).sortBy(_._2.toString)).toMap
+    val byI = sym.groupBy(_._1).map { case (k, s) => k -> s.sortBy(_._2.toString) }
+    val keys = byI.keys.toSeq.sortBy(_.toString)
+    val wi = byI.map { case (k, s) => k -> s.map(_._3).sum.toDouble }
+    val games = byI.map { case (k, s) => k -> s.map(_._4).sum }
     var p = keys.map(k => k -> 1.0).toMap
     for (_ <- 1 to iters) {
       val praw = keys.map { k =>

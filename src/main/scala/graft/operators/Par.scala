@@ -15,8 +15,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * guard below detects: the repartition is inserted ONLY when the
   * planned scan has fewer partitions than the cluster's default
   * parallelism, so at 100 TB this is a no-op and no corpus-wide
-  * round-robin shuffle is ever added. Row-identity is unchanged either
-  * way (round-robin repartition moves rows, never alters them).
+  * shuffle is ever added. Row-identity is unchanged either way (the
+  * spread hash-partitions on the row id: it moves rows, never alters
+  * them).
   */
 object Par {
 

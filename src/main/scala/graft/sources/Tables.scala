@@ -1,6 +1,11 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the engine's input tables (one parquet per table).
   *
@@ -9,10 +14,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (/root/reference/rialto_airflow/harvest_incremental/authors.py:19);
   * here every input is a columnar parquet scan so Catalyst can push
   * filters and prune columns all the way into the file reader.
+  *
+  * Every open passes the table's schema from the session memo in
+  * `object Tables`, so only the first open of a table in a session runs
+  * Spark's footer-reading inference job; later opens plan with no job.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+  }
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -46,4 +57,66 @@ final case class Tables(spark: SparkSession, dir: String) {
   }
   def documents: DataFrame = t("documents")
   def embeddings: DataFrame = t("embeddings")
+}
+
+/** Per-session parquet schema memo, the metastore role for [[Tables]].
+  *
+  * `spark.read.parquet(path)` with no schema launches a footer-reading
+  * job (`mergeSchemasInParallel`) on every call, even for one file; the
+  * pipeline re-opens the same few tables in every step, so that job was
+  * a fixed per-open cost. The memo holds only the inferred `StructType`
+  * — no DataFrame, file index or data — and a hit requires the same
+  * path, the same leaf files (name, length, modification time: an
+  * overwrite re-infers) and the same values of the session confs that
+  * change what inference returns. Sessions are weak keys, so a memo
+  * goes away with its session.
+  */
+object Tables {
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private type FileId = (String, Long, Long)
+  /** (path, schema conf values) -> (leaf files at inference, schema). */
+  private type Memo = ConcurrentHashMap[(String, Seq[Option[String]]), (Seq[FileId], StructType)]
+
+  private val memos =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Memo]())
+
+  /** The parquet schema of `path` as `spark.read.parquet(path).schema`
+    * infers it, inferred at most once per session and file identity.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val memo = memos.computeIfAbsent(spark, _ => new Memo())
+    val key = (path, schemaConfs.map(spark.conf.getOption))
+    // listed BEFORE inferring: a write racing the inference leaves a
+    // fingerprint older than the files, so the next open re-infers
+    val files = leafFiles(spark, path)
+    Option(memo.get(key)) match {
+      case Some((seen, schema)) if seen == files => schema
+      case _ =>
+        // a missing or empty path throws Spark's own error here and
+        // memoizes nothing; no lock is held while the job runs
+        val schema = spark.read.parquet(path).schema
+        memo.put(key, (files, schema))
+        schema
+    }
+  }
+
+  private def leafFiles(spark: SparkSession, path: String): Seq[FileId] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val b = Seq.newBuilder[FileId]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    } catch { case _: FileNotFoundException => Seq.empty }
+  }
 }

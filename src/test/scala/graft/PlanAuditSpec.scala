@@ -54,10 +54,10 @@ class PlanAuditSpec extends SparkSpec {
 
   test("distill field/abstract chains are map-only plans (no required shuffles)") {
     // r14: the heavy distill chains widen an unsplittable single-
-    // row-group scan with ONE explicit Par.spread round-robin exchange
-    // (REPARTITION_BY_NUM — interleaved A/B: q_distill_fields wall
-    // floor 1.50 -> 0.49 s; at production scale the guard makes it a
-    // no-op). No OTHER exchange may appear: an ENSURE_REQUIREMENTS
+    // row-group scan with ONE explicit Par.spread exchange keyed on
+    // the row id (REPARTITION_BY_NUM — interleaved A/B: q_distill_fields
+    // wall floor 1.50 -> 0.49 s; at production scale the guard makes it
+    // a no-op). No OTHER exchange may appear: an ENSURE_REQUIREMENTS
     // shuffle would mean the chain stopped being a pure projection.
     for (name <- Seq("q_distill_fields", "q_distill_abstract")) {
       val s = formatted(name)

@@ -37,6 +37,18 @@ class R14OptSpec extends SparkSpec {
     assert(out.select("m").as[String].collect().sorted === Array("a", "b"))
   }
 
+  test("bradleyTerry treats a null win count as 0 wins") {
+    // winMatrix sums are never null, but bradleyTerry is public and
+    // reads any matrix: a null wins_a/wins_b must count as no wins,
+    // not NPE in the driver-local recursion.
+    val withNulls = Seq(("a", "b", None, Some(2L)), ("b", "c", Some(1L), None))
+      .toDF("a", "b", "wins_a", "wins_b")
+    val zeros = Seq(("a", "b", 0L, 2L), ("b", "c", 1L, 0L)).toDF("a", "b", "wins_a", "wins_b")
+    val got = Arena.bradleyTerry(withNulls, iters = 3).orderBy("m").collect()
+    assert(got.map(_.getAs[String]("m")) === Array("a", "b", "c"))
+    assert(got === Arena.bradleyTerry(zeros, iters = 3).orderBy("m").collect())
+  }
+
   test("mahalanobisScreen struct-argmax keeps the min-id-among-max tiebreak") {
     // Points symmetric about the mean have identical d2 (quadratic
     // form in centered coordinates), so (4,7) and (-4,-7) tie for the
