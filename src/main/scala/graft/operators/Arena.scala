@@ -76,10 +76,10 @@ object Arena {
       val ng = wa + wb
       if (ng > 0) Seq((a, b, wa, ng), (b, a, wb, ng)) else Seq.empty
     }
-    val byI = sym.groupBy(_._1).map { case (k, s) => k -> s.sortBy(_._2.toString) }
-    val keys = byI.keys.toSeq.sortBy(_.toString)
-    val wi = byI.map { case (k, s) => k -> s.map(_._3).sum.toDouble }
-    val games = byI.map { case (k, s) => k -> s.map(_._4).sum }
+    val keys = sym.map(_._1).distinct.sortBy(_.toString)
+    val wi = keys.map(k => k -> sym.filter(_._1 == k).map(_._3).sum.toDouble).toMap
+    val games = keys.map(k => k -> sym.filter(_._1 == k).map(_._4).sum).toMap
+    val byI = keys.map(k => k -> sym.filter(_._1 == k).sortBy(_._2.toString)).toMap
     var p = keys.map(k => k -> 1.0).toMap
     for (_ <- 1 to iters) {
       val praw = keys.map { k =>

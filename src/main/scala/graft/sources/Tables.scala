@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Typed access to the engine's input tables (one parquet per table).
@@ -20,10 +19,8 @@ import org.apache.spark.sql.types.StructType
   * Spark's footer-reading inference job; later opens plan with no job.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
-  }
+  private def t(name: String): DataFrame =
+    Tables.open(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -86,37 +83,37 @@ object Tables {
   private val memos =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Memo]())
 
-  /** The parquet schema of `path` as `spark.read.parquet(path).schema`
-    * infers it, inferred at most once per session and file identity.
+  /** `spark.read.parquet(path)`, with schema inference run at most once
+    * per session and file identity. The fingerprint of a hit is taken
+    * from the opened frame's own file listing, so an open lists the
+    * table once and the memoized schema is only used for exactly the
+    * files it was inferred from; any difference re-infers.
     */
-  private def schemaOf(spark: SparkSession, path: String): StructType = {
+  private def open(spark: SparkSession, path: String): DataFrame = {
     val memo = memos.computeIfAbsent(spark, _ => new Memo())
     val key = (path, schemaConfs.map(spark.conf.getOption))
-    // listed BEFORE inferring: a write racing the inference leaves a
-    // fingerprint older than the files, so the next open re-infers
-    val files = leafFiles(spark, path)
-    Option(memo.get(key)) match {
-      case Some((seen, schema)) if seen == files => schema
-      case _ =>
-        // a missing or empty path throws Spark's own error here and
-        // memoizes nothing; no lock is held while the job runs
-        val schema = spark.read.parquet(path).schema
-        memo.put(key, (files, schema))
-        schema
+    val hit = Option(memo.get(key)).flatMap { case (seen, schema) =>
+      val df = spark.read.schema(schema).parquet(path)
+      if (scannedFiles(df).contains(seen)) Some(df) else None
+    }
+    hit.getOrElse {
+      // inference reads the footers of this frame's own listing; a
+      // missing or empty path throws Spark's own error and memoizes
+      // nothing, and no lock is held while the job runs
+      val df = spark.read.parquet(path)
+      scannedFiles(df).foreach(files => memo.put(key, (files, df.schema)))
+      df
     }
   }
 
-  private def leafFiles(spark: SparkSession, path: String): Seq[FileId] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileId]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+  /** The leaf files `df`'s parquet relation scans, from the listing
+    * Spark made when the frame was opened; None for any other plan.
+    */
+  private def scannedFiles(df: DataFrame): Option[Seq[FileId]] =
+    df.queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
       }
-      b.result().sorted
-    } catch { case _: FileNotFoundException => Seq.empty }
-  }
 }

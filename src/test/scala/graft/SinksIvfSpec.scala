@@ -184,33 +184,10 @@ class SinksIvfSpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val iters = 2
     Ivf.kmeansCentroids(e, k = 4, iters = iters) // warm: file listing etc.
-    // Count jobs with a listener instead of polling statusTracker with
-    // a sleep: the bus is FIFO, so once the marker job (tagged via job
-    // group) is observed, every fit job's onJobStart has been delivered.
-    val fitJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var markerSeen = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val group = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        if (group == "kmeans-job-budget-marker") markerSeen = true
-        else if (!markerSeen) fitJobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val cents =
-      try {
-        val c = Ivf.kmeansCentroids(e, k = 4, iters = iters)
-        spark.sparkContext.setJobGroup("kmeans-job-budget-marker", "drain barrier")
-        try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(markerSeen, "listener bus never delivered the marker job")
-        c
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (cents, fitJobs) = jobsDuring(Ivf.kmeansCentroids(e, k = 4, iters = iters))
     assert(cents.length == 4)
     val budget = 1 + iters * 3 // seed collect + ≤3 AQE stage jobs per iteration
-    assert(fitJobs.get() <= budget,
-      s"fit ran ${fitJobs.get()} jobs (> $budget) — did a count() pre-pass sneak back in?")
+    assert(fitJobs <= budget,
+      s"fit ran $fitJobs jobs (> $budget) — did a count() pre-pass sneak back in?")
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.sources.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -14,39 +12,11 @@ import org.apache.spark.sql.types.TimestampType
   */
 class TablesSpec extends SparkSpec {
 
-  /** Jobs started while `body` runs. The listener bus is FIFO, so once
-    * the marker job (tagged via job group) is delivered, every job
-    * `body` started has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val marker = "tables-spec-marker"
-    val jobs = new AtomicInteger(0)
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val group = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        if (group == marker) markerSeen = true
-        else if (!markerSeen) jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobGroup(marker, "drain barrier")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(markerSeen, "listener bus never delivered the marker job")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("a repeated table open launches no Spark job") {
     Tables(spark, sfDir).lineitem // first open in this session may infer
-    assert(jobsDuring(Tables(spark, sfDir).lineitem) == 0)
+    assert(jobsDuring(Tables(spark, sfDir).lineitem)._2 == 0)
     // the memo is per session: a new session's first open infers again
-    assert(jobsDuring(Tables(spark.newSession(), sfDir).lineitem) >= 1)
+    assert(jobsDuring(Tables(spark.newSession(), sfDir).lineitem)._2 >= 1)
   }
 
   test("a memoized open has the schema and rows inference gives") {
@@ -56,6 +26,19 @@ class TablesSpec extends SparkSpec {
     val inferred = spark.read.parquet(path)
     assert(again.schema == inferred.schema)
     assert(again.count() == inferred.count())
+  }
+
+  test("a many-file table reopens with no job and re-infers when a file is added") {
+    val dir = Files.createTempDirectory("tables_files").toString
+    val path = s"$dir/orders.parquet"
+    spark.range(40).repartition(4).select(col("id").as("o_orderkey")).write.parquet(path)
+    Tables(spark, dir).orders
+    val (again, jobs) = jobsDuring(Tables(spark, dir).orders)
+    assert(jobs == 0)
+    assert(again.inputFiles.length == 4)
+    spark.range(5).select(col("id").as("o_orderkey")).write.mode("append").parquet(path)
+    assert(jobsDuring(Tables(spark, dir).orders)._2 >= 1)
+    assert(Tables(spark, dir).orders.count() == 45)
   }
 
   test("overwriting a table at the same path re-infers its schema") {

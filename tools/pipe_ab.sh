@@ -6,8 +6,9 @@
 # kept in OUTDIR as <side><i>.json; at the end it prints, per metric,
 # each side's median and quartiles and how many pairs the change won
 # (ties count for neither), and flags a gain only when the change won
-# at least 9/10 of the pairs and the medians differ by more than the
-# parent's interquartile range.
+# at least 9/10 of all pairs run and the medians differ by more than the
+# parent's interquartile range. No gain is flagged if any run's JSON did
+# not parse or the change failed more operations than the parent.
 #
 #   tools/pipe_ab.sh <parent_dir> <change_dir> <workload> [pairs] [seconds] [trace] [outdir]
 #
@@ -53,14 +54,19 @@ def load(side, i):
         return None
 
 runs = [(load("parent", i), load("change", i)) for i in range(1, pairs + 1)]
+failures = []
 for side, k in (("parent", 0), ("change", 1)):
     ok = [r[k] for r in runs if r[k]]
+    failures.append(sum(r["failed"] for r in ok))
     print(f"{side}: {len(ok)}/{pairs} runs parsed, "
           f"{sum(1 for r in ok if r['correct'])} correct, "
-          f"{sum(r['failed'] for r in ok)} failures")
+          f"{failures[-1]} failures")
 full = [(p, c) for p, c in runs if p and c]
 if not full:
     sys.exit("pipe_ab: no complete pair")
+# an unparsed run on either side, or more failures on the change, rules
+# out a gain; wins are counted against every pair run, not just full ones
+gain_possible = len(full) == pairs and failures[1] <= failures[0]
 
 def quartiles(v):
     if len(v) == 1:
@@ -75,8 +81,8 @@ for name in full[0][0]["metrics"]:
     sign = 1 if better.get(name, "lower") == "lower" else -1
     wins = sum(1 for a, b in zip(pv, cv) if sign * (a - b) > 0)
     (p1, pm, p3), (c1, cm, c3) = quartiles(pv), quartiles(cv)
-    gain = wins >= 0.9 * len(full) and sign * (pm - cm) > (p3 - p1)
+    gain = gain_possible and wins >= 0.9 * pairs and sign * (pm - cm) > (p3 - p1)
     unit = full[0][0]["metrics"][name]["unit"]
     print(f"{name + ' (' + unit + ')':24} {p1:8.3f} / {pm:8.3f} / {p3:8.3f} "
-          f"{c1:8.3f} / {cm:8.3f} / {c3:8.3f} {wins:>3}/{len(full):<2}  {'yes' if gain else 'no'}")
+          f"{c1:8.3f} / {cm:8.3f} / {c3:8.3f} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no'}")
 EOF
