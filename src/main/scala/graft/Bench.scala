@@ -158,7 +158,9 @@ object Bench {
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
       try runOn(sfDir)(fn) catch { case _: Throwable => () }
     }
-    val errors = scala.collection.mutable.ListBuffer.empty[String]
+    // (name, "Class: message" with the message cut at 200 chars); the
+    // detail goes to bench_result.json only, stdout keeps the names.
+    val errors = scala.collection.mutable.ListBuffer.empty[(String, String)]
     val remeasured = scala.collection.mutable.ListBuffer.empty[String]
     val (prior, priorSf1) = loadPriors(sys.env.getOrElse("SPARK_GRAFT_PRIOR", "bench_prior.json"), sfDir)
     // Optional comma-separated subset (dev iteration); full run when unset.
@@ -200,7 +202,11 @@ object Bench {
         }
         clearAccumulatedCaches()
         (name, med, cpu)
-      } catch { case _: Throwable => errors += name; clearAccumulatedCaches(); (name, -1.0, -1.0) }
+      } catch { case e: Throwable =>
+        errors += name -> s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}"
+        clearAccumulatedCaches()
+        (name, -1.0, -1.0)
+      }
     }
     // Scale-ladder section at 10x data (see scaladoc).
     val sf1Dir = "benchdata/sf1"
@@ -231,7 +237,9 @@ object Bench {
     def r4(v: Double): Double = math.round(v * 10000) / 10000.0
     def qjson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + r4(v) }.mkString("{", ",", "}")
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = errors.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val errDetail = errors.map { case (n, d) => Verify.jsonString(n) + ":" + Verify.jsonString(d) }
+      .mkString("{", ",", "}")
     val remeas = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
     val walls = results.map { case (n, w, _) => (n, w) }
     val cpuSecs = results.map { case (n, _, c) => (n, c) }
@@ -248,7 +256,7 @@ object Bench {
     val sf1Part =
       if (sf1Results.isEmpty) ""
       else s""","queries_sf1":${qjson(wallsSf1)},"cpu_sf1":${qjson(cpuSecsSf1)},"total_sf1":$totalSf1,"total_cpu_sf1":$totalCpuSf1,"sf1":"$sf1Dir""""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(walls)},"cpu":${qjson(cpuSecs)},"total_cpu":$totalCpu,"remeasured":$remeas,"errors":$errs,"sf":"$sfDir"$sf1Part}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(walls)},"cpu":${qjson(cpuSecs)},"total_cpu":$totalCpu,"remeasured":$remeas,"errors":$errs,"error_detail":$errDetail,"sf":"$sfDir"$sf1Part}"""
     // The full per-query record lands as a file: sbt prefixes stdout
     // with "[info] " (which has broken scraping of the bare JSON
     // before), and the driver's round artifact captures only the LAST
@@ -280,7 +288,7 @@ object Bench {
     // line past the ~2 KB tail window it is sized for. Per-query cpu_s
     // stays in bench_result.json for the same reason; stdout carries
     // only the suite-level total_cpu.
-    val errsShort = errors.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errsShort = errors.take(5).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(hq)},"total_cpu":$totalCpu,"n_queries":${results.size},"remeasured_n":${remeasured.size},"errors_n":${errors.size},"errors":$errsShort,"sf":"$sfDir"$shortSf1,"full":"bench_result.json"}""")
     spark.stop()
   }

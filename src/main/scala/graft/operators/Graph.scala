@@ -325,13 +325,17 @@ object Graph {
       // small, shuffle join once it isn't). The previous pinned
       // shuffle_hash paid a per-task hash-relation build on every
       // round (micro-measured 1.5-2.1 s cpu/round vs 0.24 unhinted on
-      // a 100k-edge frame — MicroJoin.scala).
-      // contribs is NOT separately checkpointed (round 14): its two
-      // consumers (the dangling-mass scalar and the rank join) live in
-      // the ONE `next` plan, where Spark's exchange reuse computes the
-      // aggregation once (ReusedExchange on the identical subtree) —
-      // the old per-round contribs checkpoint was a whole extra eager
-      // job per round for lineage the `next` checkpoint already cuts.
+      // a 100k-edge frame — OPTIMIZATION_r14.md §6).
+      // contribs is NOT separately checkpointed (round 14): both its
+      // consumers (dangling-mass scalar, rank join) live in the ONE
+      // `next` plan. They do not share one aggregation: each one's
+      // filter on the grouping key (id === / =!= DanglingSentinel) is
+      // pushed below it onto the eAug scan, so the join + partial
+      // aggregation run twice per round, once per slice, and only the
+      // ranks broadcast is a ReusedExchange (final AQE plan, 2026-10-17).
+      // Still cheaper than the old eager per-round checkpoint:
+      // OPTIMIZATION_r14.md §6 measured this shape at flat wall and
+      // cpu_min 16.1 -> 14.1 s.
       val contribs = eAug.join(ranks, eAug("src") === ranks("id"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("r") / col("deg")).as("m"))
@@ -439,10 +443,10 @@ object Graph {
       // small, shuffle join once it isn't). The previous pinned
       // shuffle_hash paid a per-task hash-relation build on every
       // round (micro-measured 1.5-2.1 s cpu/round vs 0.24 unhinted on
-      // a 100k-edge frame — MicroJoin.scala).
+      // a 100k-edge frame — OPTIMIZATION_r14.md §6).
       // contribs is NOT separately checkpointed (round 14): both its
-      // consumers live in the ONE `next` plan where exchange reuse
-      // computes the aggregation once — see [[pageRankIterate]].
+      // consumers live in the ONE `next` plan, where the join + partial
+      // aggregation run once per filtered slice — see [[pageRankIterate]].
       val contribs = eAug.join(ranks, eAug("src") === ranks("id"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("r") / col("deg")).as("m"))

@@ -209,6 +209,11 @@ object Inference {
     * pairs of sign(x_j - x_i); tau-a = S / (n(n-1)/2); z uses the
     * no-ties variance n(n-1)(2n+5)/18 with continuity correction.
     * The pair join is bounded by the PERIOD domain (days²), not rows.
+    *
+    * Contract: the (group, period) aggregate is BROADCAST, so
+    * |groups| × |periods| rows must fit a broadcast: a low-cardinality
+    * `groupCol` (the one caller groups by `event_type`, a handful of
+    * values, over days), never a per-user or per-document trend test.
     */
   def mannKendall(df: DataFrame, groupCol: String, period: Column, x: Column): DataFrame = {
     val d = df.select(col(groupCol).as("g"), period.as("p"), x.cast("long").as("x"))

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scan-parallelism repair for expensive per-row pipelines (round 14).
   *
@@ -26,6 +29,12 @@ object Par {
     * NARROW base projection (before the expensive expressions), so the
     * shuffle carries source columns, not computed ones.
     *
+    * The partition count is the sum over the planned leaf file scans
+    * of `df.queryExecution`; nothing is executed (`df.rdd` would run
+    * every upstream AQE stage of a shuffled frame and plan it twice).
+    * A frame whose plan already holds an Exchange is returned
+    * unchanged: its parallelism is the exchange's, not the scan's.
+    *
     * Spread by a high-cardinality KEY (the row id) rather than
     * round-robin: RoundRobinPartitioning pays a whole-row local sort
     * before the exchange (spark.sql.execution.sortBeforeRepartition,
@@ -36,6 +45,12 @@ object Par {
     */
   def spread(df: DataFrame, key: Column): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p, key)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    if (plan.exists(_.isInstanceOf[Exchange]) ||
+        plan.collectLeaves().collect { case s: FileSourceScanExec => s.inputRDD.getNumPartitions }.sum >= p) df
+    else df.repartition(p, key)
   }
 }

@@ -77,4 +77,15 @@ class R14OptSpec extends SparkSpec {
     assert(Par.spread(wide, col("o_orderkey")).rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism + 3)
   }
+
+  test("Par.spread of a shuffled input launches no job and returns it unchanged") {
+    // groupBy output: its plan holds an Exchange, so reading its
+    // partition count through df.rdd would execute the upstream AQE
+    // stage while the plan is still being built.
+    val agg = spark.read.parquet(s"$sfDir/orders.parquet")
+      .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
+    val (spreadDf, jobs) = jobsDuring(Par.spread(agg, col("o_orderstatus")))
+    assert(jobs == 0, s"spreading a groupBy output ran $jobs job(s)")
+    assert(spreadDf eq agg)
+  }
 }

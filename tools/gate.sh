@@ -20,9 +20,14 @@ cd "$(dirname "$0")/.."
 SFDIR="${1:?usage: tools/gate.sh <sfdir> [outdir]}"
 OUTDIR="${2:-/tmp/graft_gate_out}"
 
+# Heap: half of MemTotal (floor 2g, cap 64g), the same derivation as
+# the test command's SPARK_DRIVER_MEM, so the gate fits a small host
+# as well as the bench host.
+XMX="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 64 ? 64 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
+
 rm -rf "$OUTDIR"
-echo "== gate stage 1: graft.Verify $SFDIR -> $OUTDIR"
-java -Xmx64g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+echo "== gate stage 1: graft.Verify $SFDIR -> $OUTDIR (-Xmx$XMX)"
+java "-Xmx$XMX" -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SFDIR" "$OUTDIR" || exit 1
 
 echo "== gate stage 2: driver-calibrated DuckDB oracle compare"
