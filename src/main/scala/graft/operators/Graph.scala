@@ -23,12 +23,36 @@ object Graph {
     * Dataset.unpersist only clears plan caches — the checkpoint's RDD
     * must be unpersisted directly, and it sits in the LogicalRDD leaf
     * the checkpoint call left as the frame's plan.
+    *
+    * Contract: this unpersists EVERY LogicalRDD in the frame's
+    * analyzed plan, not just its own. Pass only a frame that is itself
+    * a `localCheckpoint` (or a projection of one); a lazy frame
+    * derived from several checkpoints would free all of them,
+    * including blocks that later consumers still read.
     */
   private def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Canonical undirected edges, checkpointed: one (least, greatest)
+    * long pair per edge, named (`lo`, `hi`), self-loops dropped.
+    */
+  private def canonicalEdges(edges: DataFrame, src: String, dst: String,
+                             lo: String = "a", hi: String = "b"): DataFrame =
+    edges
+      .select(least(col(src).cast("long"), col(dst).cast("long")).as(lo),
+        greatest(col(src).cast("long"), col(dst).cast("long")).as(hi))
+      .filter(col(lo) =!= col(hi))
+      .distinct()
+      .localCheckpoint(true)
+
+  /** Both directions (a, b) of [[canonicalEdges]] and each vertex's degree (v, deg). */
+  private def symmetricDegrees(e: DataFrame): (DataFrame, DataFrame) = {
+    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
+    (sym, sym.groupBy("a").agg(count(lit(1)).as("deg")).select(col("a").as("v"), col("deg")))
+  }
 
   /** (id, component) for every vertex incident to an edge; component
     * is the minimum vertex id in the connected component. Edges are
@@ -155,11 +179,7 @@ object Graph {
     */
   def modularity(pairs: DataFrame, aCol: String, bCol: String,
                  labels: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("u"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+    val e = canonicalEdges(pairs, aCol, bCol, "u", "v")
     val lab = labels.select(col("id").cast("long").as("id"), col("label"))
     val tagged = e
       .join(lab.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), "u")
@@ -199,11 +219,7 @@ object Graph {
     // [[GraphAssets.supplierPart]]).
     val e =
       if (prepared) edges.select(col(src).as("u"), col(dst).as("v"))
-      else edges.select(
-          least(col(src).cast("long"), col(dst).cast("long")).as("u"),
-          greatest(col(src).cast("long"), col(dst).cast("long")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
+      else canonicalEdges(edges, src, dst, "u", "v")
     val deg = e.select(col("u").as("id")).unionByName(e.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     val kLit = array(ks.map(lit): _*)
@@ -267,23 +283,23 @@ object Graph {
     * per iteration) and the previous round's blocks are released.
     */
   def pageRank(edges: DataFrame, src: String, dst: String,
-               iters: Int = 3, damping: Double = 0.85,
-               prepared: Boolean = false): DataFrame = {
-    // prepared = true: the caller passes an already-distinct,
-    // self-loop-free, src-partitioned long-typed edge asset (e.g. a
-    // [[GraphAssets]] memo) — skip the per-query dedup shuffle and
-    // checkpoint and read from the shared cache instead.
-    val e =
-      if (prepared) edges.select(col(src).as("src"), col(dst).as("dst"))
-      else edges
-        .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .repartition(col("src"))
-        .localCheckpoint(true)
-    val v = pageRankNodes(e).localCheckpoint(true)
-    val eAug = pageRankAugment(e, v).localCheckpoint(true)
+               iters: Int = 3, damping: Double = 0.85): DataFrame = {
+    val (v, eAug) = pageRankInputs(edges, src, dst)
     pageRankIterate(eAug, v, iters, damping)
+  }
+
+  /** Checkpointed vertex set and [[pageRankAugment]]ed edges of a raw
+    * edge list (long-cast, loop-free, distinct, partitioned on src).
+    */
+  private def pageRankInputs(edges: DataFrame, src: String, dst: String): (DataFrame, DataFrame) = {
+    val e = edges
+      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+      .repartition(col("src"))
+      .localCheckpoint(true)
+    val v = pageRankNodes(e).localCheckpoint(true)
+    (v, pageRankAugment(e, v).localCheckpoint(true))
   }
 
   /** Distinct vertex set of a (src, dst) edge frame. */
@@ -306,16 +322,33 @@ object Graph {
       .repartition(col("src"))
   }
 
-  /** The power-iteration core over a PREPARED augmented edge table
+  /** Uniform PageRank over a PREPARED augmented edge table
     * ([[pageRankAugment]] output, materialized — checkpointed or
-    * persisted) and its vertex set. Numerically identical to
-    * [[pageRank]]; split out so shared assets feed the rounds
-    * directly.
+    * persisted) and its vertex set: [[powerIterate]] with w = 1/n on
+    * every vertex. Split out so shared assets ([[GraphAssets]]) feed
+    * the rounds directly.
     */
   def pageRankIterate(eAug: DataFrame, v: DataFrame,
                       iters: Int, damping: Double): DataFrame = {
     val n = v.count()
-    var ranks = v.select(col("id"), lit(1.0 / n).as("r")).localCheckpoint(true)
+    powerIterate(eAug, v.select(col("id"), lit(1.0 / n).as("w")), iters, damping)
+      .select(col("id"), round(col("r"), 6).as("rank"))
+  }
+
+  /** The one PageRank power iteration, shared by [[pageRank]] and
+    * [[personalizedPageRank]]: `iters` rounds of
+    * r' = (1−d)·w + d·(m + dm·w) over the teleport (preference)
+    * vector `teleport(id, w)`, where m is the rank flowing in over the
+    * edges and dm the dangling mass, which returns through the
+    * teleport vector. Returns (id, r), unrounded.
+    */
+  private def powerIterate(eAug: DataFrame, teleport: DataFrame,
+                           iters: Int, damping: Double): DataFrame = {
+    // The initial ranks get their own checkpoint: releasing a round's
+    // input frees every LogicalRDD under it, which for a bare
+    // projection of a checkpointed teleport vector would free the
+    // blocks every later round still reads.
+    var ranks = teleport.select(col("id"), col("w").as("r")).localCheckpoint(true)
     for (_ <- 1 to iters) {
       // UNHINTED (round 14): both join sides are checkpointed frames
       // with no usable static stats, so the initial plan is a safe
@@ -344,21 +377,20 @@ object Graph {
       // serialized a whole extra job per round).
       val dm = contribs.filter(col("id") === DanglingSentinel)
         .agg(coalesce(sum("m"), lit(0.0)).as("dm"))
-      val next = v.join(contribs.filter(col("id") =!= DanglingSentinel), Seq("id"), "left")
+      val next = teleport.join(contribs.filter(col("id") =!= DanglingSentinel), Seq("id"), "left")
         .crossJoin(broadcast(dm))
         .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("m"), lit(0.0)) +
-              col("dm") / lit(n.toDouble))).as("r"))
+          (lit(1.0 - damping) * col("w") +
+            lit(damping) * (coalesce(col("m"), lit(0.0)) + col("dm") * col("w"))).as("r"))
         .localCheckpoint(true)
       releaseCheckpoint(ranks)
       ranks = next
     }
-    ranks.select(col("id"), round(col("r"), 6).as("rank"))
+    ranks
   }
 
   /** Sentinel vertex id collecting dangling-node mass inside the
-    * contribution aggregation of [[pageRank]] / [[personalizedPageRank]]
+    * contribution aggregation of [[powerIterate]]
     * — never a real node id (ids come from cast long columns; the
     * synthetic edge is the only producer of this value).
     */
@@ -399,72 +431,25 @@ object Graph {
   }
 
   /** Personalized PageRank (Jeh & Widom 2003 / Page et al. 1999's
-    * restart vector): identical power iteration to [[pageRank]] but
-    * teleports to the SEED distribution instead of uniformly —
-    * "importance relative to these nodes", the similarity/
-    * recommendation primitive a uniform PageRank can't express.
-    * Dangling mass also returns through the restart vector (the
-    * standard PPR convention). Same scale shape: edges checkpointed
-    * once with out-degrees, only (id, rank) pairs move per round, and
-    * the dangling mass rides the contribution aggregation itself via
-    * the sentinel vertex — ONE job per round; the seed table
+    * restart vector): the [[pageRank]] power iteration, teleporting to
+    * the SEED distribution instead of uniformly — "importance relative
+    * to these nodes", the similarity/recommendation primitive a
+    * uniform PageRank can't express. Dangling mass also returns
+    * through the restart vector (the standard PPR convention). Same
+    * inputs, rounds and scale shape as [[pageRank]]; the seed table
     * broadcasts.
     */
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
                            seeds: DataFrame, iters: Int = 3,
                            damping: Double = 0.85): DataFrame = {
-    val e = edges
-      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val v = e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    // Same one-job-per-round shape as [[pageRank]]: dangling nodes
-    // feed a sentinel vertex inside the contribution aggregation.
-    val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    val dangling = v.join(e.select(col("src").as("id")), Seq("id"), "left_anti")
-    val eAug = eDeg.unionByName(
-        dangling.select(col("id").as("src"), lit(DanglingSentinel).as("dst"), lit(1L).as("deg")))
-      .repartition(col("src")).localCheckpoint(true)
+    val (v, eAug) = pageRankInputs(edges, src, dst)
     val nSeeds = seeds.count()
     val sVec = v.join(broadcast(seeds.select(col("id"), lit(1.0 / nSeeds).as("w"))),
       Seq("id"), "left")
       .select(col("id"), coalesce(col("w"), lit(0.0)).as("w"))
       .localCheckpoint(true)
-    var ranks = sVec.select(col("id"), col("w").as("r")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // UNHINTED (round 14): both join sides are checkpointed frames
-      // with no usable static stats, so the initial plan is a safe
-      // sort-merge — never the mid-scale ~30 MB static-broadcast
-      // pathology r12 measured — and AQE then rewrites per round from
-      // the TRUE shuffle sizes (broadcast while the rank table is
-      // small, shuffle join once it isn't). The previous pinned
-      // shuffle_hash paid a per-task hash-relation build on every
-      // round (micro-measured 1.5-2.1 s cpu/round vs 0.24 unhinted on
-      // a 100k-edge frame — OPTIMIZATION_r14.md §6).
-      // contribs is NOT separately checkpointed (round 14): both its
-      // consumers live in the ONE `next` plan, where the join + partial
-      // aggregation run once per filtered slice — see [[pageRankIterate]].
-      val contribs = eAug.join(ranks, eAug("src") === ranks("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("r") / col("deg")).as("m"))
-      // Dangling mass as a broadcast one-row frame inside the `next`
-      // plan — same fold as [[pageRank]]: one job per round, no
-      // per-round `.head()` driver action.
-      val dm = contribs.filter(col("id") === DanglingSentinel)
-        .agg(coalesce(sum("m"), lit(0.0)).as("dm"))
-      val next = sVec.join(contribs.filter(col("id") =!= DanglingSentinel), Seq("id"), "left")
-        .crossJoin(broadcast(dm))
-        .select(col("id"), col("w"),
-          (lit(1.0 - damping) * col("w") +
-            lit(damping) * (coalesce(col("m"), lit(0.0)) + col("dm") * col("w"))).as("r"))
-        .localCheckpoint(true)
-      releaseCheckpoint(ranks)
-      ranks = next.select("id", "r")
-    }
-    ranks.select(col("id"), round(col("r"), 6).as("ppr"))
+    powerIterate(eAug, sVec, iters, damping)
+      .select(col("id"), round(col("r"), 6).as("ppr"))
       .filter(col("ppr") > 0)
   }
 
@@ -696,12 +681,7 @@ object Graph {
     * n_triangles).
     */
   def triangleCount(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val e = canonicalEdges(edges, src, dst)
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
     val tri = wedges.join(e.as("e3"),
@@ -739,12 +719,7 @@ object Graph {
     * left join with tri = 0.
     */
   def localClustering(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val e = canonicalEdges(edges, src, dst)
     val deg = e.select(col("a").as("v")).unionByName(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
@@ -855,15 +830,8 @@ object Graph {
     */
   def linkPrediction(edges: DataFrame, src: String, dst: String,
                      minCommon: Long): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
-      .select(col("a").as("v"), col("deg"))
+    val e = canonicalEdges(edges, src, dst)
+    val (sym, deg) = symmetricDegrees(e)
     // wedge through z: (u, z), (z, w) with u < w — each common
     // neighbor contributes once per unordered candidate pair
     val cand = sym.as("l").join(sym.as("r"),
@@ -893,15 +861,8 @@ object Graph {
     */
   def adamicAdar(edges: DataFrame, src: String, dst: String,
                  minCommon: Long): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
-      .select(col("a").as("v"), col("deg"))
+    val e = canonicalEdges(edges, src, dst)
+    val (sym, deg) = symmetricDegrees(e)
     val hub = sym.join(deg, col("b") === col("v")).drop("v")
       .select(col("a"), col("b"), col("deg").as("deg_z"))
     // wedges through z = l.b, carrying deg z; collapse to integer
@@ -932,15 +893,8 @@ object Graph {
     */
   def neighborhoodJaccard(edges: DataFrame, src: String, dst: String,
                           minCommon: Long): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
-      .select(col("a").as("v"), col("deg"))
+    val e = canonicalEdges(edges, src, dst)
+    val (sym, deg) = symmetricDegrees(e)
     val cand = sym.as("l").join(sym.as("r"),
         col("l.b") === col("r.a") && col("l.a") < col("r.b"))
       .groupBy(col("l.a").as("pa"), col("r.b").as("pb"))
@@ -973,22 +927,17 @@ object Graph {
     * stay sparse (only nodes reachable at that depth carry rows) and
     * the output rejoins the node set with zero-fill.
     */
-  def hits(edges: DataFrame, src: String, dst: String, rounds: Int,
-           prepared: Boolean = false): DataFrame = {
+  def hits(edges: DataFrame, src: String, dst: String, rounds: Int): DataFrame = {
     val d38 = "decimal(38,0)"
-    // prepared = true: already-distinct null-free long-typed edges
-    // from a shared asset (e.g. [[GraphAssets.custPart]]).
     // one unkeyed checkpoint: per-key pre-partitioned copies were
     // measured WORSE (18.1 s vs 10.4 s at sf3 — localCheckpoint does
     // not preserve hash partitioning for the round joins, so the two
     // extra materializations bought nothing)
-    val e =
-      if (prepared) edges.select(col(src).as("u"), col(dst).as("v"))
-      else edges
-        .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-        .filter(col("u").isNotNull && col("v").isNotNull)
-        .distinct()
-        .localCheckpoint(true)
+    val e = edges
+      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+      .distinct()
+      .localCheckpoint(true)
     val nodes = e.select(col("u").as("id")).unionByName(e.select(col("v").as("id")))
       .distinct()
     // round 1 with a₀ ≡ 1 folds to the out-degree — one agg, no join.
@@ -1057,15 +1006,8 @@ object Graph {
     * degree joins on the edge list, so cost is edge-bounded.
     */
   def assortativity(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges
-      .select(least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
-      .select(col("a").as("v"), col("deg"))
+    val e = canonicalEdges(edges, src, dst)
+    val (sym, deg) = symmetricDegrees(e)
     val pairs = sym
       .join(deg.withColumnRenamed("deg", "deg_u"), col("a") === col("v")).drop("v")
       .join(deg.withColumnRenamed("deg", "deg_v"), col("b") === col("v")).drop("v")

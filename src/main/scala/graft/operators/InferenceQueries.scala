@@ -15,53 +15,6 @@ object InferenceQueries {
 
   private def centsValue = round(col("value") * 100).cast("long")
 
-  /** Co-purchase part graph: parts co-ordered in ≥2 distinct orders.
-    * Shared by eight graph queries (BFS levels, degree distribution,
-    * SSSP, PPR, link prediction, assortativity, Adamic-Adar, node
-    * Jaccard), so the derivation — a basket self-join, the single
-    * most expensive upstream in the graph family — is MATERIALIZED
-    * once per (session, dir) and reused: the shared-intermediate
-    * design a production pipeline would use (build the edge table
-    * once, run every graph metric off it). The memo key includes the
-    * session so a restarted session rebuilds rather than referencing a
-    * dead frame; the cached frame is (pa, pb, n) rows only, a sliver
-    * of the corpus. persist, NOT localCheckpoint: an external
-    * unpersist (Bench clears all persistent RDDs between queries to
-    * keep measurements self-contained) must leave the frame
-    * RECOMPUTABLE — a truncated checkpoint lineage would die instead
-    * (the q_modularity SQLSTATE 56000 failure mode, cross-query
-    * edition).
-    */
-  private val coPurchaseCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  private def coPurchaseEdges(t: Tables): DataFrame = {
-    // The memo is unbounded by construction, so evict dead sessions on
-    // every access (a stopped session's entry would otherwise retain
-    // its plan tree forever), and take the build under a lock:
-    // TrieMap.getOrElseUpdate may evaluate the default twice under
-    // concurrent first calls, leaving one caller persisting a frame
-    // nobody else references.
-    val df = coPurchaseCache.synchronized {
-      coPurchaseCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      coPurchaseCache.getOrElseUpdate((t.spark, t.dir), {
-        val bi = t.lineitem
-          .select(col("l_orderkey").as("b"), col("l_partkey").as("i")).distinct()
-        bi.as("x").join(bi.as("y"), col("x.b") === col("y.b") && col("x.i") < col("y.i"))
-          .groupBy(col("x.i").as("pa"), col("y.i").as("pb"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      })
-    }
-    // An external unpersist (Bench between queries) clears the STORAGE
-    // MARKER too, so a bare memo would silently recompute the basket
-    // self-join on every action afterwards — re-arm the persist
-    // whenever it is found disarmed (profiled at sf1: the self-join is
-    // 9.7 s of q_ppr's 16 s; every other phase is sub-second).
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
   val queries: Map[String, Q] = Map(
     // #87 two-sample KS: did purchase values shift vs click values?
     "q_ks_test" -> { (s, dir) =>
@@ -130,7 +83,7 @@ object InferenceQueries {
     // edges), from the minimum part id, depth-capped at 6; per-level
     // aggregate so the check is a reachability-set compare.
     "q_bfs_levels" -> { (s, dir) =>
-      val e = coPurchaseEdges(Tables(s, dir))
+      val e = GraphAssets.coPurchase(Tables(s, dir))
       val seed = e.agg(min(col("pa")).as("id"))
       Graph.bfsLevels(e, "pa", "pb", seed, maxDepth = 6)
         .groupBy("dist").agg(count(lit(1)).as("n_nodes"),
@@ -140,7 +93,7 @@ object InferenceQueries {
     // #94b degree distribution of the co-purchase graph — the graph
     // profile that feeds power-law checks.
     "q_degree_dist" -> { (s, dir) =>
-      Graph.degreeHistogram(coPurchaseEdges(Tables(s, dir)), "pa", "pb")
+      Graph.degreeHistogram(GraphAssets.coPurchase(Tables(s, dir)), "pa", "pb")
     },
 
     // #88b weighted single-source shortest paths: Bellman-Ford over
@@ -149,7 +102,7 @@ object InferenceQueries {
     // highest-degree vertex (smallest id on ties) — the min-id seed
     // lands in a 2-node component at sf0.1.
     "q_shortest_path" -> { (s, dir) =>
-      val e = coPurchaseEdges(Tables(s, dir))
+      val e = GraphAssets.coPurchase(Tables(s, dir))
         .withColumn("w", greatest(lit(1L), lit(10L) - col("n")))
       val sym = e.select(col("pa").as("u")).unionByName(e.select(col("pb").as("u")))
       val seed = sym.groupBy("u").agg(count(lit(1)).as("deg"))
@@ -171,7 +124,7 @@ object InferenceQueries {
     // symmetrized co-purchase graph — "importance relative to these
     // parts", the recommendation primitive uniform PageRank lacks.
     "q_ppr" -> { (s, dir) =>
-      val e = coPurchaseEdges(Tables(s, dir))
+      val e = GraphAssets.coPurchase(Tables(s, dir))
       val sym = e.select(col("pa"), col("pb"))
         .unionByName(e.select(col("pb").as("pa"), col("pa").as("pb")))
       val seeds = e.select(col("pa").as("id")).distinct().orderBy("id").limit(5)
@@ -323,13 +276,13 @@ object InferenceQueries {
       // minCommon = 2 (not 3): at the driver's sf0.01 gate the graph
       // is sparse enough that >= 3 emits ZERO rows — a vacuous 0-0
       // oracle pass. 2 produces real rows at every scale the gate runs.
-      Graph.linkPrediction(coPurchaseEdges(Tables(s, dir)), "pa", "pb", minCommon = 2L)
+      Graph.linkPrediction(GraphAssets.coPurchase(Tables(s, dir)), "pa", "pb", minCommon = 2L)
     },
 
     // #94d degree assortativity of the co-purchase graph (Newman
     // 2002): do popular parts co-sell with popular parts?
     "q_assortativity" -> { (s, dir) =>
-      Graph.assortativity(coPurchaseEdges(Tables(s, dir)), "pa", "pb")
+      Graph.assortativity(GraphAssets.coPurchase(Tables(s, dir)), "pa", "pb")
     },
 
     // Adamic-Adar link scoring on the same graph: common-neighbor
@@ -337,7 +290,7 @@ object InferenceQueries {
     // (Adamic & Adar 2003) — integer counts per (pair, degree) first,
     // float only over the degree histogram.
     "q_adamic_adar" -> { (s, dir) =>
-      Graph.adamicAdar(coPurchaseEdges(Tables(s, dir)), "pa", "pb", minCommon = 2L)
+      Graph.adamicAdar(GraphAssets.coPurchase(Tables(s, dir)), "pa", "pb", minCommon = 2L)
     },
 
     // Neighborhood Jaccard node similarity on the same graph —
@@ -345,7 +298,7 @@ object InferenceQueries {
     // ONE IEEE division (bit-identical, unrounded); adjacent pairs
     // kept and flagged.
     "q_node_jaccard" -> { (s, dir) =>
-      Graph.neighborhoodJaccard(coPurchaseEdges(Tables(s, dir)), "pa", "pb",
+      Graph.neighborhoodJaccard(GraphAssets.coPurchase(Tables(s, dir)), "pa", "pb",
         minCommon = 2L)
     },
 

@@ -24,7 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => RewriteThresholdedLevenshtein)
-    ext.injectOptimizerRule(_ => MaterializedViews.Rewrite)
+    ext.injectOptimizerRule(session => new MaterializedViews.Rewrite(session))
     ext.injectPlannerStrategy(_ => TopKStrategy)
     GraftFunctions.all.foreach(ext.injectFunction)
   }

@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
@@ -27,9 +27,13 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * summary's analyzed plan that RE-ALIASES the summary columns onto
   * the original aggregate's output exprIds — parent operators keep
   * resolving against the same attributes, so the rewrite is invisible
-  * above. Registry empty ⇒ the rule is a no-op pattern miss (zero
-  * cost to every other query). Staleness is the registrant's contract
-  * (same as any warehouse MV refreshed by the pipeline that owns it).
+  * above. Each session's rule instance answers only from summaries
+  * registered in that session (`summary.sparkSession`): another
+  * session on the same context may read different data under the same
+  * path. No summary of its session ⇒ the rule returns the plan
+  * unchanged (zero cost to every other query). Staleness is the
+  * registrant's contract (same as any warehouse MV refreshed by the
+  * pipeline that owns it).
   */
 object MaterializedViews {
 
@@ -106,16 +110,17 @@ object MaterializedViews {
     case _ => false
   }
 
-  object Rewrite extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      if (registry.isEmpty) plan
+  final class Rewrite(session: SparkSession) extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = {
+      val defs = registry.values.filter(_.summary.sparkSession eq session)
+      if (defs.isEmpty) plan
       else plan.transform {
         case agg @ Aggregate(Seq(g: AttributeReference), aggExprs, child, _)
             if aggExprs.length == 2 &&
               aggExprs.head.isInstanceOf[AttributeReference] &&
               aggExprs.head.exprId == g.exprId &&
               isCountStar(aggExprs(1)) =>
-          registry.values
+          defs
             .find(d => d.groupCol == g.name && relationMatches(child, d.basePathSuffix))
             .map { d =>
               val sumPlan = d.summary.queryExecution.analyzed
@@ -127,5 +132,6 @@ object MaterializedViews {
             }
             .getOrElse(agg)
       }
+    }
   }
 }

@@ -165,6 +165,24 @@ class ExtensionsSpec extends SparkSpec {
     } finally MaterializedViews.clear()
   }
 
+  test("MaterializedViews: a summary registered in one session never rewrites another's plans") {
+    import graft.plans.MaterializedViews
+    val summary = spark.read.parquet(s"$sfDir/documents.parquet")
+      .groupBy("source").agg(count(lit(1)).as("cnt")).localCheckpoint(true)
+    val expect = summary.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    MaterializedViews.register("docs_by_source_scoped", "documents.parquet", "source", summary)
+    try {
+      val own = spark.read.parquet(s"$sfDir/documents.parquet").groupBy("source").count()
+      assert(!own.queryExecution.executedPlan.toString.contains("documents.parquet"))
+      // a second session on the same context runs the same optimizer
+      // extensions, but the registrant's summary is not its data
+      val other = spark.newSession().read.parquet(s"$sfDir/documents.parquet")
+        .groupBy("source").count()
+      assert(other.queryExecution.executedPlan.toString.contains("documents.parquet"))
+      assert(other.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expect)
+    } finally MaterializedViews.clear()
+  }
+
   test("saltedEquiJoin equals the plain join") {
     val big = spark.read.parquet(s"$sfDir/lineitem.parquet").select("l_orderkey", "l_partkey", "l_quantity")
     val small = spark.read.parquet(s"$sfDir/part.parquet").select("p_partkey", "p_size")

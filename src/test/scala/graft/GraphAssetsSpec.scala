@@ -22,12 +22,6 @@ class GraphAssetsSpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("pageRank(prepared asset) == pageRank(raw edges)") {
-    same(
-      Graph.pageRank(GraphAssets.supplierPart(t), "src", "dst", 3, 0.85, prepared = true),
-      Graph.pageRank(rawSupplierPart, "src", "dst", 3, 0.85))
-  }
-
   test("pageRankIterate(memoized aug assets) == pageRank(raw edges)") {
     same(
       Graph.pageRankIterate(GraphAssets.supplierPartAug(t),

@@ -35,10 +35,10 @@ class InferenceSpec extends SparkSpec {
     try {
       // hits' rounds stay LAZY (no checkpoints), so the final collect
       // executes the whole chain as ONE Dataset action and the
-      // listener sees all 3 hinted score joins. pageRank/PPR/katz
-      // checkpoint each round at the RDD level, which bypasses
-      // QueryExecutionListener — their hint is the same code path,
-      // pinned here through the hits plan.
+      // listener sees all 3 hinted score joins. katz checkpoints each
+      // round at the RDD level, which bypasses QueryExecutionListener —
+      // its hint is the same code path, pinned here through the hits
+      // plan (pageRank and PPR rounds are unhinted since round 14).
       val e = Seq((1L, 101L), (1L, 102L), (2L, 101L), (3L, 102L)).toDF("u", "v")
       Graph.hits(e, "u", "v", rounds = 2).collect()
       // listener delivery is async; poll until the expected joins land.
@@ -416,6 +416,35 @@ class InferenceSpec extends SparkSpec {
       .collect().map(x => x.getAs[Long]("id") -> x.getAs[Double]("ppr")).toMap
     assert(r(1L) > r(2L) && r(2L) == r(3L) && r(2L) > 0)
     assert(!r.contains(4L) && !r.contains(5L)) // mass never teleports there
+  }
+
+  // directed, with a dangling vertex (6) and a source-only vertex (7),
+  // so both the dangling mass and the teleport term carry weight
+  private def smallDigraph = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+    (5L, 4L), (5L, 6L), (7L, 1L)).toDF("s", "d")
+
+  test("personalizedPageRank seeded with every vertex equals pageRank") {
+    // a uniform preference vector is uniform PageRank (Jeh & Widom 2003)
+    val edges = smallDigraph
+    val all = edges.select(col("s").as("id")).union(edges.select(col("d").as("id"))).distinct()
+    val ppr = Graph.personalizedPageRank(edges, "s", "d", all, iters = 3)
+      .collect().map(x => x.getAs[Long]("id") -> x.getAs[Double]("ppr")).toMap
+    val pr = Graph.pageRank(edges, "s", "d", iters = 3)
+      .collect().map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+    assert(ppr.keySet == (1L to 7L).toSet)
+    assert(ppr == pr)
+  }
+
+  test("build-phase job counts of pageRank, personalizedPageRank and bfsLevels") {
+    // Eager jobs run while the frame is BUILT (checkpoints, the vertex
+    // and seed counts), before any plan exists. A change may lower a
+    // count; raising one needs a reason written here.
+    val edges = smallDigraph
+    val seeds = Seq(1L).toDF("id")
+    val pr = jobsDuring(Graph.pageRank(edges, "s", "d", iters = 3))._2
+    val ppr = jobsDuring(Graph.personalizedPageRank(edges, "s", "d", seeds, iters = 3))._2
+    val bfs = jobsDuring(Graph.bfsLevels(edges, "s", "d", seeds, maxDepth = 3))._2
+    assert((pr, ppr, bfs) == ((38, 41, 17)))
   }
 
   test("splitConformal: hand-computed radius and coverage") {
