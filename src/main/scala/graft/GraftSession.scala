@@ -13,6 +13,18 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One pass of
+    * all 371 queries compiles 4,838 distinct classes at sf 0.001
+    * (OPTIMIZATION_r15.md, "Codegen cache"), and one q_pagerank run
+    * alone about 80, so at the default every warm run recompiles its
+    * code with Janino. About 2x the census leaves room for growth. The
+    * cache holds compiled expression classes keyed on their generated
+    * source, never data or plans. Static conf: Spark reads it once per
+    * JVM, when the first session compiles code.
+    */
+  val CodegenCacheEntries = 10000
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
@@ -21,6 +33,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -18,10 +18,6 @@ object Distill {
   /** First non-NULL candidate, in precedence order (distiller.first). */
   def firstValid(candidates: Column*): Column = coalesce(candidates: _*)
 
-  /** All non-NULL candidates as an array (distiller.all). */
-  def allValid(candidates: Column*): Column =
-    filter(array(candidates: _*), c => c.isNotNull)
-
   /** JsonPathRule over a JSON-string column: `$.a.b[0]` etc. */
   def jsonRule(jsonCol: Column, path: String): Column =
     get_json_object(jsonCol, "$." + path)

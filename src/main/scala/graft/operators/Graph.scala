@@ -743,24 +743,29 @@ object Graph {
     * `WITH RECURSIVE` reachability query (the oracle runs exactly
     * that in DuckDB); at cluster scale each round is one shuffle of
     * frontier-adjacent ids — the iteration-count bound is the graph
-    * diameter cap, not the corpus size.
+    * diameter cap, not the corpus size. The frontier carries its level
+    * and the next one is `dist + 1`, not a per-level literal, so levels
+    * of one plan shape share their generated code; all frontier rows
+    * share one dist, so the distinct and the anti-join see the same ids.
+    * The seed level is a projection over the checkpointed ids, so level
+    * 1's frontier and visited set broadcast the same ids and AQE reuses
+    * that exchange.
     */
   def bfsLevels(edges: DataFrame, src: String, dst: String,
                 seed: DataFrame, maxDepth: Int): DataFrame = {
     val sym = edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    var dist = seed.select(col("id"), lit(0).as("dist")).localCheckpoint(true)
-    var frontier = dist.select("id")
-    for (d <- 1 to maxDepth) {
+    var dist = seed.select("id").localCheckpoint(true).withColumn("dist", lit(0))
+    var frontier = dist
+    for (_ <- 1 to maxDepth) {
       val prevDist = dist
       val next = frontier.join(sym, frontier("id") === sym("u"))
-        .select(col("v").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .withColumn("dist", lit(d)).localCheckpoint(true)
+        .select(col("v").as("id"), (col("dist") + 1).as("dist")).distinct()
+        .join(dist, Seq("id"), "left_anti").localCheckpoint(true)
       dist = dist.unionByName(next).localCheckpoint(true)
       releaseCheckpoint(prevDist)
-      frontier = next.select("id")
+      frontier = next
     }
     releaseCheckpoint(sym)
     dist

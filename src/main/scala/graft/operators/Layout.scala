@@ -68,14 +68,6 @@ object Layout {
       .drop("__xm", "__ym")
   }
 
-  /** Hilbert clustered layout — [[zorderLayout]] with the better
-    * curve; identical write shape (one range exchange + local sort).
-    */
-  def hilbertLayout(df: DataFrame, xCol: String, yCol: String, bits: Int, numFiles: Int): DataFrame =
-    withH(df, xCol, yCol, bits)
-      .repartitionByRange(numFiles, col("h"))
-      .sortWithinPartitions("h")
-
   /** Deterministic shard id in [0, nShards): md5 of (id ":" seed) —
     * the house engine-portable hash (Sampling.md5Bucket, conv ↔
     * DuckDB '0x'||substr cast). Rows never migrate between shards as

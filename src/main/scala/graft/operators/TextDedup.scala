@@ -831,15 +831,6 @@ object TextDedup {
     }: _*)
   }
 
-  /** Pack bit arrays into two longs (lo = bits 0-31, hi = bits 32-63)
-    * for compact storage/joins.
-    */
-  def packBits(bits: Column): (Column, Column) = {
-    def pack(range: Range, off: Int): Column =
-      range.map(i => element_at(bits, i + 1) * lit(1L << (i - off))).reduce(_ + _)
-    (pack(0 until 32, 0), pack(32 until 64, 32))
-  }
-
   /** Hamming distance between two equal-length bit arrays. */
   def hamming(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => when(x =!= y, 1L).otherwise(0L)), lit(0L), (acc, v) => acc + v)

@@ -379,20 +379,14 @@ object VectorOps {
         (col("max_bench_sim") < tau).as("keep"))
   }
 
-  /** DuckDB twin of [[randomProject]]'s `proj` column (same inlined
-    * ±1 literals, same rounding) over a DOUBLE[] column expression.
-    * The `+ 0.0` is the house negative-zero guard: DuckDB's round
-    * keeps -0.0 for small negatives where Spark's BigDecimal round
-    * returns +0.0, and the driver compares stringified values.
-    */
-  def projectSqlDuck(vExpr: String, outDim: Int, dim: Int): String =
-    projectColsSqlDuck(vExpr, outDim, dim).mkString("[", ", ", "]")
-
   /** Per-element DuckDB expressions for [[randomProject]] — one scalar
     * expression per output dimension. The driver's comparator sorts and
     * hashes SCALAR cells; an array column defeats its row sort, so the
     * oracle-checked q_jl_project emits each projection component as its
-    * own DOUBLE column built from these.
+    * own DOUBLE column built from these. The `+ 0.0` is the house
+    * negative-zero guard: DuckDB's round keeps -0.0 for small negatives
+    * where Spark's BigDecimal round returns +0.0, and the driver compares
+    * stringified values.
     */
   def projectColsSqlDuck(vExpr: String, outDim: Int, dim: Int): Seq[String] = {
     val scale = math.sqrt(outDim.toDouble)

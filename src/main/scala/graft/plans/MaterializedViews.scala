@@ -63,7 +63,6 @@ object MaterializedViews {
     registry.put(name, SummaryDef(basePathSuffix, groupCol, stored))
   }
 
-  def deregister(name: String): Unit = registry.remove(name)
   def clear(): Unit = registry.clear()
 
   private def scannedPath(plan: LogicalPlan): Option[LogicalPlan] = plan match {

@@ -46,12 +46,6 @@ object JsonSource {
     (good, bad, () => { raw.unpersist(); () })
   }
 
-  /** JSONL export (one object per line, gzip): the interchange format
-    * for handing a corpus slice to a non-Spark consumer.
-    */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "gzip").json(path)
-
   /** ORC round-trip: the other columnar format a lakehouse neighbor
     * may demand; predicate pushdown and column pruning work as with
     * parquet.

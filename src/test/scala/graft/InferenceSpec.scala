@@ -447,6 +447,45 @@ class InferenceSpec extends SparkSpec {
     assert((pr, ppr, bfs) == ((38, 41, 17)))
   }
 
+  test("codegen cache: a third round of the graph operators compiles almost nothing") {
+    // One round emits over 200 generated classes, more than Spark's
+    // default 100-entry codegen cache holds, so at the default the LRU
+    // evicts them before the next round and every round recompiles all
+    // of them (211, 234 and 223 in one run). GraftSession sizes the
+    // cache to the engine's code set. A warm round is not held to
+    // exactly 0: AQE numbers and re-plans stages in the order they
+    // finish, so a few classes of a warm round can be variants that
+    // the earlier rounds did not meet (0 to 10 per round measured).
+    val edges = smallDigraph
+    val seeds = Seq(1L).toDF("id")
+    def round(): Unit = {
+      Graph.pageRank(edges, "s", "d", iters = 3).collect()
+      Graph.personalizedPageRank(edges, "s", "d", seeds, iters = 3).collect()
+      Graph.bfsLevels(edges, "s", "d", seeds, maxDepth = 3).collect()
+      Graph.connectedComponents(edges, "s", "d").collect()
+    }
+    val compiles = (1 to 3).map(_ => compilesDuring(round())._2)
+    assert(compiles.last < 20L, s"compiles per round: ${compiles.mkString(", ")}")
+  }
+
+  test("bfsLevels: a deeper level reuses the code of a shallower one") {
+    // Level 3 plans like level 2, so it must compile nothing once a
+    // maxDepth = 2 run has compiled level 2; a per-level literal in the
+    // generated source would compile level 3 afresh. (From level 4 the
+    // visited set's size estimate passes the broadcast threshold and
+    // the anti-join plans differently, so that level has code of its own.)
+    // Int ids: no other spec runs bfsLevels on them, so the codegen cache
+    // holds no level of these plans when the test starts.
+    val edges = (1 to 6).map(i => (i, i + 1)).toDF("u", "v") // no level empty
+    val seed = Seq(1).toDF("id")
+    assert(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 2).collect().length == 3)
+    val (three, compiles) =
+      compilesDuring(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 3).collect())
+    assert(three.map(r => r.getAs[Int]("id") -> r.getAs[Int]("dist")).toSet ==
+      (0 to 3).map(d => (d + 1) -> d).toSet)
+    assert(compiles == 0L)
+  }
+
   test("splitConformal: hand-computed radius and coverage") {
     // calibration 0,10,...,90: mean 45, scaled residuals |10v-450|,
     // k = ceil(0.9*11) = 10 -> q_scaled = 450 -> q_hat = 45.0

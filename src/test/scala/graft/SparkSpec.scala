@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -41,6 +42,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(markerSeen, "listener bus never delivered the marker job")
       (result, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of classes Spark compiled while it
+    * ran. Every compile is a miss in the JVM-wide codegen cache, so a
+    * repeat of already-compiled work counts 0. Suites run one at a time
+    * in the test JVM, so no other suite's compiles land in the delta.
+    */
+  def compilesDuring[T](body: => T): (T, Long) = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val result = body
+    (result, compiles.getCount - before)
   }
 
   override def afterAll(): Unit = {
