@@ -34,6 +34,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Whole-stage codegen class names without the stage id: AQE numbers
+      // stages in the order they finish, so with the id in the name the
+      // same code under another number is a new source and a cache miss
+      // (OPTIMIZATION_r15.md, "Stage ids out of class names").
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge list — the missing middle of a
@@ -19,34 +19,26 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Drop the storage blocks behind a locally-checkpointed frame.
-    * Dataset.unpersist only clears plan caches — the checkpoint's RDD
-    * must be unpersisted directly, and it sits in the LogicalRDD leaf
-    * the checkpoint call left as the frame's plan.
-    *
-    * Contract: this unpersists EVERY LogicalRDD in the frame's
-    * analyzed plan, not just its own. Pass only a frame that is itself
-    * a `localCheckpoint` (or a projection of one); a lazy frame
-    * derived from several checkpoints would free all of them,
-    * including blocks that later consumers still read.
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Canonical undirected edges, checkpointed: one (least, greatest)
     * long pair per edge, named (`lo`, `hi`), self-loops dropped.
     */
   private def canonicalEdges(edges: DataFrame, src: String, dst: String,
                              lo: String = "a", hi: String = "b"): DataFrame =
-    edges
+    Rounds.checkpoint(edges
       .select(least(col(src).cast("long"), col(dst).cast("long")).as(lo),
         greatest(col(src).cast("long"), col(dst).cast("long")).as(hi))
       .filter(col(lo) =!= col(hi))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct()).df
+
+  /** Both directions of every edge, (`src`, `dst`, `carry`) and
+    * (`dst`, `src`, `carry`) named (`u`, `v`, ...), from ONE pass over
+    * `edges`: a self-union of a lazy frame runs its whole plan twice.
+    */
+  private def bothWays(edges: DataFrame, src: Column, dst: Column, carry: Column*): DataFrame =
+    edges.select(explode(array(
+      struct(src.as("u") +: dst.as("v") +: carry: _*),
+      struct(dst.as("u") +: src.as("v") +: carry: _*))).as("e"))
+      .select("e.*")
 
   /** Both directions (a, b) of [[canonicalEdges]] and each vertex's degree (v, deg). */
   private def symmetricDegrees(e: DataFrame): (DataFrame, DataFrame) = {
@@ -65,50 +57,37 @@ object Graph {
     * graphs deeper than ~2^maxRounds.
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String, maxRounds: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    var e = edges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-
-    // Convergence = identical edge set. Both sides are distinct (u,v)
-    // sets, so count + order-free xor-of-hashes is an exact compare
-    // (xor, not sum: sum overflows Long under ANSI mode). The previous
-    // round's signature is remembered, so each round runs ONE small
-    // aggregate over the just-checkpointed edges, not two.
-    val sig = (d: DataFrame) =>
-      d.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
-    var prevSig = sig(e)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      // The eager checkpoint above materialized `next` from `e`, so
-      // the previous round's checkpoint blocks are dead weight from
-      // here on — without this unpersist every round of a deep run
-      // stays pinned in executor storage until the session ends (the
-      // final round's blocks, which back the returned frame, are the
-      // only ones that must survive).
-      releaseCheckpoint(e)
-      val nextSig = sig(next)
-      converged = nextSig == prevSig
-      prevSig = nextSig
-      e = next
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds; " +
-          "the partial mapping would be incorrect — increase maxRounds")
-
     // Final state is a star forest: (child, root) edges with root = min
     // id of the component. Roots name their own component.
+    val e = starForest(edges, src, dst, maxRounds).df
     val children = e.select(col("u").as("id"), col("v").as("component"))
     val roots = e.select(col("v").as("id")).distinct()
       .join(children.select(col("id")), Seq("id"), "left_anti")
       .withColumn("component", col("id"))
     children.unionByName(roots)
+  }
+
+  /** The converged large-star / small-star rounds of
+    * [[connectedComponents]]: (u, v) child → root edges. Convergence =
+    * identical edge set. Every state is a distinct (u, v) set, so its
+    * observed (row count, xor of edge hashes) signature is an exact
+    * compare (xor, not sum: sum overflows Long under ANSI mode), and
+    * it comes out of the state's own checkpoint job.
+    */
+  private[operators] def starForest(edges: DataFrame, src: String, dst: String,
+                                    maxRounds: Int): Rounds.State = {
+    val sig = coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("sig")
+    val init = Rounds.checkpoint(edges
+      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct(), sig)
+    val (forest, converged) =
+      Rounds.iterate(init, maxRounds, sig)(e => smallStar(largeStar(e)))(_ == _)
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within $maxRounds rounds; " +
+          "the partial mapping would be incorrect — increase maxRounds")
+    forest
   }
 
   /** connectedComponents plus singleton vertices from `vertices(idCol)`
@@ -144,24 +123,21 @@ object Graph {
     * and release the previous round's blocks like [[pageRank]].
     */
   def labelPropagation(edges: DataFrame, src: String, dst: String, iters: Int): DataFrame = {
-    val e0 = edges.select(col(src).as("u"), col(dst).as("v")).filter(col("u") =!= col("v"))
-    val e = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint(true)
-    var labels = e.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val e = Rounds.checkpoint(bothWays(edges, col(src), col(dst))
+      .filter(col("u") =!= col("v")).distinct()).df
+    val init = Rounds.checkpoint(e.select(col("u").as("id")).distinct()
+      .withColumn("label", col("id")))
+    Rounds.iterate(init, iters) { labels =>
       val votes = e.join(labels, e("v") === labels("id"))
         .select(col("u"), col("label"))
         .unionByName(labels.select(col("id").as("u"), col("label")))
-      val counts = votes.groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
-      val next = counts
+      // partitioned on u once: both aggregations group by u first, so
+      // the argmax reuses the vote count's partitioning, one shuffle
+      votes.repartition(col("u"))
+        .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("u").as("id"))
         .agg(min_by(col("label"), struct((-col("c")).as("nc"), col("label").as("l"))).as("label"))
-        .localCheckpoint(true)
-      releaseCheckpoint(labels)
-      labels = next
-    }
-    labels
+    }()._1.df
   }
 
   /** Newman modularity Q (Newman & Girvan 2004) of a node labeling
@@ -277,29 +253,28 @@ object Graph {
     * the (dst, contribution) aggregation shuffle and the
     * (id, rank) pairs themselves; edges (the 100 TB side: the web
     * link graph dwarfs its vertex set) never re-shuffle. The driver
-    * holds two scalars per round (dangling mass) plus N — never a
-    * vertex or edge collection. Each round's ranks are eagerly
-    * localCheckpoint'd (lineage would otherwise grow by three joins
-    * per iteration) and the previous round's blocks are released.
+    * holds N — never a vertex or edge collection. Each round's
+    * aggregate is eagerly checkpointed (lineage would otherwise grow by
+    * a join per iteration) and the previous round's blocks are
+    * released.
     */
   def pageRank(edges: DataFrame, src: String, dst: String,
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
     val (v, eAug) = pageRankInputs(edges, src, dst)
-    pageRankIterate(eAug, v, iters, damping)
+    uniformRanks(eAug, v, iters, damping)
   }
 
   /** Checkpointed vertex set and [[pageRankAugment]]ed edges of a raw
     * edge list (long-cast, loop-free, distinct, partitioned on src).
     */
-  private def pageRankInputs(edges: DataFrame, src: String, dst: String): (DataFrame, DataFrame) = {
-    val e = edges
+  private def pageRankInputs(edges: DataFrame, src: String, dst: String): (Rounds.State, DataFrame) = {
+    val e = Rounds.checkpoint(edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val v = pageRankNodes(e).localCheckpoint(true)
-    (v, pageRankAugment(e, v).localCheckpoint(true))
+      .repartition(col("src"))).df
+    val v = Rounds.checkpoint(pageRankNodes(e))
+    (v, Rounds.checkpoint(pageRankAugment(e, v.df)).df)
   }
 
   /** Distinct vertex set of a (src, dst) edge frame. */
@@ -326,14 +301,17 @@ object Graph {
     * ([[pageRankAugment]] output, materialized — checkpointed or
     * persisted) and its vertex set: [[powerIterate]] with w = 1/n on
     * every vertex. Split out so shared assets ([[GraphAssets]]) feed
-    * the rounds directly.
+    * the rounds directly. The vertex ids are checkpointed once: their
+    * observed row count is n, so no separate count job runs.
     */
   def pageRankIterate(eAug: DataFrame, v: DataFrame,
-                      iters: Int, damping: Double): DataFrame = {
-    val n = v.count()
-    powerIterate(eAug, v.select(col("id"), lit(1.0 / n).as("w")), iters, damping)
+                      iters: Int, damping: Double): DataFrame =
+    uniformRanks(eAug, Rounds.checkpoint(v.select(col("id"))), iters, damping)
+
+  private def uniformRanks(eAug: DataFrame, v: Rounds.State,
+                           iters: Int, damping: Double): DataFrame =
+    powerIterate(eAug, v.df.select(col("id"), lit(1.0 / v.rows).as("w")), iters, damping)
       .select(col("id"), round(col("r"), 6).as("rank"))
-  }
 
   /** The one PageRank power iteration, shared by [[pageRank]] and
     * [[personalizedPageRank]]: `iters` rounds of
@@ -341,52 +319,40 @@ object Graph {
     * vector `teleport(id, w)`, where m is the rank flowing in over the
     * edges and dm the dangling mass, which returns through the
     * teleport vector. Returns (id, r), unrounded.
+    *
+    * Each round runs `eAug ⋈ ranks` and its partial aggregation ONCE.
+    * The teleport rows join the same aggregation as rows without flow,
+    * so it yields (id, m, w) for every vertex plus the sentinel's row,
+    * whose m is dm. Both consumers of the aggregate select rows by
+    * `w`, an aggregate output, so neither filter is pushed below it:
+    * the two share one exchange (the dm side reads it as a
+    * ReusedExchange) and dm rejoins as a broadcast one-row frame, with
+    * no driver action. A null flow adds nothing to a sum, and r is the
+    * same expression as before, so the ranks are the same doubles.
     */
   private def powerIterate(eAug: DataFrame, teleport: DataFrame,
                            iters: Int, damping: Double): DataFrame = {
-    // The initial ranks get their own checkpoint: releasing a round's
-    // input frees every LogicalRDD under it, which for a bare
-    // projection of a checkpointed teleport vector would free the
-    // blocks every later round still reads.
-    var ranks = teleport.select(col("id"), col("w").as("r")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // UNHINTED (round 14): both join sides are checkpointed frames
-      // with no usable static stats, so the initial plan is a safe
-      // sort-merge — never the mid-scale ~30 MB static-broadcast
-      // pathology r12 measured — and AQE then rewrites per round from
-      // the TRUE shuffle sizes (broadcast while the rank table is
-      // small, shuffle join once it isn't). The previous pinned
-      // shuffle_hash paid a per-task hash-relation build on every
-      // round (micro-measured 1.5-2.1 s cpu/round vs 0.24 unhinted on
-      // a 100k-edge frame — OPTIMIZATION_r14.md §6).
-      // contribs is NOT separately checkpointed (round 14): both its
-      // consumers (dangling-mass scalar, rank join) live in the ONE
-      // `next` plan. They do not share one aggregation: each one's
-      // filter on the grouping key (id === / =!= DanglingSentinel) is
-      // pushed below it onto the eAug scan, so the join + partial
-      // aggregation run twice per round, once per slice, and only the
-      // ranks broadcast is a ReusedExchange (final AQE plan, 2026-10-17).
-      // Still cheaper than the old eager per-round checkpoint:
-      // OPTIMIZATION_r14.md §6 measured this shape at flat wall and
-      // cpu_min 16.1 -> 14.1 s.
-      val contribs = eAug.join(ranks, eAug("src") === ranks("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("r") / col("deg")).as("m"))
-      // The dangling mass rejoins as a BROADCAST one-row frame inside
-      // the same plan — no per-round driver action (a `.head()` here
-      // serialized a whole extra job per round).
-      val dm = contribs.filter(col("id") === DanglingSentinel)
-        .agg(coalesce(sum("m"), lit(0.0)).as("dm"))
-      val next = teleport.join(contribs.filter(col("id") =!= DanglingSentinel), Seq("id"), "left")
-        .crossJoin(broadcast(dm))
+    val noFlow = lit(null).cast("double")
+    val init = Rounds.checkpoint(teleport.select(col("id"), col("w").as("r")))
+    Rounds.iterate(init, iters) { ranks =>
+      // UNHINTED (round 14): the ranks checkpoint carries its exact
+      // size, so this join broadcasts it while the rank table is small
+      // and shuffles once it is not. The previous pinned shuffle_hash
+      // paid a per-task hash-relation build on every round
+      // (micro-measured 1.5-2.1 s cpu/round vs 0.24 unhinted on a
+      // 100k-edge frame — OPTIMIZATION_r14.md §6).
+      val agg = eAug.join(ranks, eAug("src") === ranks("id"))
+        .select(col("dst").as("id"), (col("r") / col("deg")).as("c"), noFlow.as("w"))
+        .unionByName(teleport.select(col("id"), noFlow.as("c"), col("w")))
+        .groupBy("id")
+        .agg(sum("c").as("m"), max("w").as("w"))
+      val dm = agg.filter(col("w").isNull).select(col("m").as("dm"))
+      agg.filter(col("w").isNotNull)
+        .join(broadcast(dm), lit(true), "left")
         .select(col("id"),
-          (lit(1.0 - damping) * col("w") +
-            lit(damping) * (coalesce(col("m"), lit(0.0)) + col("dm") * col("w"))).as("r"))
-        .localCheckpoint(true)
-      releaseCheckpoint(ranks)
-      ranks = next
-    }
-    ranks
+          (lit(1.0 - damping) * col("w") + lit(damping) *
+            (coalesce(col("m"), lit(0.0)) + coalesce(col("dm"), lit(0.0)) * col("w"))).as("r"))
+    }()._1.df
   }
 
   /** Sentinel vertex id collecting dangling-node mass inside the
@@ -443,11 +409,10 @@ object Graph {
                            seeds: DataFrame, iters: Int = 3,
                            damping: Double = 0.85): DataFrame = {
     val (v, eAug) = pageRankInputs(edges, src, dst)
-    val nSeeds = seeds.count()
-    val sVec = v.join(broadcast(seeds.select(col("id"), lit(1.0 / nSeeds).as("w"))),
-      Seq("id"), "left")
-      .select(col("id"), coalesce(col("w"), lit(0.0)).as("w"))
-      .localCheckpoint(true)
+    val s = Rounds.checkpoint(seeds.select(col("id")))
+    val sVec = Rounds.checkpoint(v.df
+      .join(broadcast(s.df.select(col("id"), lit(1.0 / s.rows).as("w"))), Seq("id"), "left")
+      .select(col("id"), coalesce(col("w"), lit(0.0)).as("w"))).df
     powerIterate(eAug, sVec, iters, damping)
       .select(col("id"), round(col("r"), 6).as("ppr"))
       .filter(col("ppr") > 0)
@@ -532,39 +497,34 @@ object Graph {
     // advisory), and every per-round scan of the asset would then run
     // on 2 tasks whatever the cluster width (measured as 2-12 s
     // bimodal round times at sf3 before the pin).
-    val c = e0.select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct().repartition(p, col("a")).localCheckpoint(true)
+    val c = Rounds.checkpoint(
+      e0.select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+        .distinct().repartition(p, col("a"))).df
     val deg0 = c.select(col("a").as("id")).unionByName(c.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    var deg = deg0.localCheckpoint(true)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
+    // each state's checkpoint observes its peel size, so an empty peel
+    // is known without a job of its own
+    val peel = count(when(col("deg") < k, true)).as("peel")
+    val init = Rounds.checkpoint(deg0, peel)
+    val (deg, _) = Rounds.iterate(init, if (init.seen.getLong(1) == 0) 0 else rounds, peel) { deg =>
+      // neighbors of this round's peel lose one per incident removed
+      // edge; the removed side is V-grain tiny, so it broadcasts and
+      // the edge asset never re-shuffles
       val removed = deg.filter(col("deg") < k).select("id")
-      if (removed.isEmpty) done = true
-      else {
-        // neighbors of this round's peel lose one per incident removed
-        // edge; the removed side is V-grain tiny, so AQE broadcasts it
-        // and the edge asset never re-shuffles
-        val lossA = c.join(removed.select(col("id").as("b")), "b")
-          .groupBy(col("a").as("id")).agg(count(lit(1)).as("l"))
-        val lossB = c.join(removed.select(col("id").as("a")), "a")
-          .groupBy(col("b").as("id")).agg(count(lit(1)).as("l"))
-        val loss = lossA.unionByName(lossB).groupBy("id").agg(sum(col("l")).as("loss"))
-        val next = deg.filter(col("deg") >= k)
-          .join(loss, Seq("id"), "left")
-          .select(col("id"), (col("deg") - coalesce(col("loss"), lit(0L))).as("deg"))
-          .localCheckpoint(true)
-        releaseCheckpoint(deg)
-        deg = next
-      }
-    }
-    releaseCheckpoint(c)
+      val lossA = c.join(removed.select(col("id").as("b")), "b")
+        .groupBy(col("a").as("id")).agg(count(lit(1)).as("l"))
+      val lossB = c.join(removed.select(col("id").as("a")), "a")
+        .groupBy(col("b").as("id")).agg(count(lit(1)).as("l"))
+      val loss = lossA.unionByName(lossB).groupBy("id").agg(sum(col("l")).as("loss"))
+      deg.filter(col("deg") >= k)
+        .join(loss, Seq("id"), "left")
+        .select(col("id"), (col("deg") - coalesce(col("loss"), lit(0L))).as("deg"))
+    }((_, next) => next.getLong(1) == 0)
+    Rounds.release(c)
     // a survivor with zero induced edges has no row in the
     // edge-aggregated formulation (or the unrolled oracle) — keep
     // the surfaces identical
-    deg.filter(col("deg") > 0)
+    deg.df.filter(col("deg") > 0)
   }
 
   /** DuckDB SQL for the identical fixed-round k-core peel over
@@ -621,20 +581,18 @@ object Graph {
         .groupBy(col("ed.u").as("u"), col("ed.v").as("v"))
         .agg(count(lit(1)).as("support"))
     }
-    var cur = edges
+    val init = Rounds.checkpoint(edges
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+      .filter(col("a") =!= col("b")).distinct())
+    val cur = Rounds.iterate(init, rounds) { cur =>
       val s = supportOf(cur)
       // inner join: an edge in no triangle has no support row and is
       // peeled (0 < k-2 always here) — identical semantics to the
       // oracle's JOIN.
-      val next = cur.join(s, cur("a") === s("u") && cur("b") === s("v"))
+      cur.join(s, cur("a") === s("u") && cur("b") === s("v"))
         .filter(col("support") >= k - 2)
-        .select(col("a"), col("b")).localCheckpoint(true)
-      releaseCheckpoint(cur)
-      cur = next
-    }
+        .select(col("a"), col("b"))
+    }()._1.df
     val fin = supportOf(cur)
     cur.join(fin, cur("a") === fin("u") && cur("b") === fin("v"), "left")
       .select(col("a").as("u"), col("b").as("v"),
@@ -753,22 +711,19 @@ object Graph {
     */
   def bfsLevels(edges: DataFrame, src: String, dst: String,
                 seed: DataFrame, maxDepth: Int): DataFrame = {
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"))
-      .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    var dist = seed.select("id").localCheckpoint(true).withColumn("dist", lit(0))
-    var frontier = dist
-    for (_ <- 1 to maxDepth) {
-      val prevDist = dist
-      val next = frontier.join(sym, frontier("id") === sym("u"))
+    val sym = Rounds.checkpoint(bothWays(edges, col(src), col(dst))
+      .filter(col("u") =!= col("v")).distinct()).df
+    // One checkpoint per level, all kept: the visited set is the union
+    // of the levels so far, and the result is the union of them all.
+    val seedLevel = Rounds.checkpoint(seed.select("id")).df.withColumn("dist", lit(0))
+    val levels = (1 to maxDepth).foldLeft(Vector(seedLevel)) { (levels, _) =>
+      val frontier = levels.last
+      levels :+ Rounds.checkpoint(frontier.join(sym, frontier("id") === sym("u"))
         .select(col("v").as("id"), (col("dist") + 1).as("dist")).distinct()
-        .join(dist, Seq("id"), "left_anti").localCheckpoint(true)
-      dist = dist.unionByName(next).localCheckpoint(true)
-      releaseCheckpoint(prevDist)
-      frontier = next
+        .join(levels.reduce(_ unionByName _), Seq("id"), "left_anti")).df
     }
-    releaseCheckpoint(sym)
-    dist
+    Rounds.release(sym)
+    levels.reduce(_ unionByName _)
   }
 
   /** Weighted single-source shortest paths, fixed Bellman-Ford rounds
@@ -788,20 +743,15 @@ object Graph {
     */
   def bellmanFord(edges: DataFrame, src: String, dst: String, w: String,
                   seed: DataFrame, rounds: Int): DataFrame = {
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"), col(w).as("w"))
-      .unionByName(edges.select(col(dst).as("u"), col(src).as("v"), col(w).as("w")))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    var dist = seed.select(col("id"), lit(0L).as("dist_w")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val prev = dist
+    val sym = Rounds.checkpoint(bothWays(edges, col(src), col(dst), col(w).as("w"))
+      .filter(col("u") =!= col("v")).distinct()).df
+    val init = Rounds.checkpoint(seed.select(col("id"), lit(0L).as("dist_w")))
+    val dist = Rounds.iterate(init, rounds) { dist =>
       val relaxed = dist.join(sym, dist("id") === sym("u"))
         .select(col("v").as("id"), (col("dist_w") + col("w")).as("dist_w"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist_w").as("dist_w"))
-        .localCheckpoint(true)
-      releaseCheckpoint(prev)
-    }
-    releaseCheckpoint(sym)
+      dist.unionByName(relaxed).groupBy("id").agg(min("dist_w").as("dist_w"))
+    }()._1.df
+    Rounds.release(sym)
     dist
   }
 
@@ -811,9 +761,7 @@ object Graph {
     * then a degree-keyed aggregate; ids never leave their aggregates.
     */
   def degreeHistogram(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"))
-      .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val sym = bothWays(edges, col(src), col(dst)).filter(col("u") =!= col("v")).distinct()
     sym.groupBy("u").agg(count(lit(1)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).as("n_nodes"),
         min("u").as("min_id"), max("u").as("max_id"))
@@ -938,11 +886,10 @@ object Graph {
     // measured WORSE (18.1 s vs 10.4 s at sf3 — localCheckpoint does
     // not preserve hash partitioning for the round joins, so the two
     // extra materializations bought nothing)
-    val e = edges
+    val e = Rounds.checkpoint(edges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
+      .distinct()).df
     val nodes = e.select(col("u").as("id")).unionByName(e.select(col("v").as("id")))
       .distinct()
     // round 1 with a₀ ≡ 1 folds to the out-degree — one agg, no join.
@@ -1046,14 +993,12 @@ object Graph {
     // (e.g. [[GraphAssets.supplierPartSym]]) — skip the build.
     val e =
       if (prepared) edges.select(col(src).as("src"), col(dst).as("dst"))
-      else edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-        .union(edges.select(col(dst).cast("long").as("src"), col(src).cast("long").as("dst")))
+      else Rounds.checkpoint(bothWays(edges, col(src).cast("long"), col(dst).cast("long"))
+        .select(col("u").as("src"), col("v").as("dst"))
         .distinct()
-        .repartition(col("src"))
-        .localCheckpoint(true)
-    val c1 = e.groupBy("dst").agg(count(lit(1)).as("c1"))
-      .withColumnRenamed("dst", "id")
-      .localCheckpoint(true)
+        .repartition(col("src"))).df
+    val c1 = Rounds.checkpoint(e.groupBy("dst").agg(count(lit(1)).as("c1"))
+      .withColumnRenamed("dst", "id")).df
     // SHUFFLE_HASH on the node-grain side: its stats sit just under
     // the 32 MiB auto-broadcast threshold at sf3, and the measured
     // auto-broadcast plan (serialize + build a ~30 MB hash relation
@@ -1062,13 +1007,12 @@ object Graph {
     // default vs 9.3 s with the broadcast suppressed. At cluster scale
     // the node table only grows, so the hint is also the safe plan.
     def step(prev: DataFrame, prevC: String, cn: String): DataFrame =
-      e.join(prev.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
+      Rounds.checkpoint(e.join(prev.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
         .groupBy("dst").agg(sum(prevC).as(cn))
-        .withColumnRenamed("dst", "id")
-        .localCheckpoint(true)
+        .withColumnRenamed("dst", "id")).df
     val c2 = step(c1, "c1", "c2")
     val c3 = step(c2, "c2", "c3")
-    releaseCheckpoint(e)
+    Rounds.release(e)
     c1.join(c2.hint("shuffle_hash"), Seq("id"), "left")
       .join(c3.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"), col("c1"),

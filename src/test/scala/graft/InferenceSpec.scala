@@ -435,16 +435,48 @@ class InferenceSpec extends SparkSpec {
     assert(ppr == pr)
   }
 
-  test("build-phase job counts of pageRank, personalizedPageRank and bfsLevels") {
-    // Eager jobs run while the frame is BUILT (checkpoints, the vertex
-    // and seed counts), before any plan exists. A change may lower a
-    // count; raising one needs a reason written here.
+  test("build-phase job counts of the graph operators") {
+    // Eager jobs run while the frame is BUILT (checkpoints), before any
+    // plan exists. A change may lower a count; raising one needs a
+    // reason written here.
     val edges = smallDigraph
     val seeds = Seq(1L).toDF("id")
     val pr = jobsDuring(Graph.pageRank(edges, "s", "d", iters = 3))._2
     val ppr = jobsDuring(Graph.personalizedPageRank(edges, "s", "d", seeds, iters = 3))._2
     val bfs = jobsDuring(Graph.bfsLevels(edges, "s", "d", seeds, maxDepth = 3))._2
-    assert((pr, ppr, bfs) == ((38, 41, 17)))
+    val lpa = jobsDuring(Graph.labelPropagation(edges, "s", "d", iters = 3))._2
+    val cc = jobsDuring(Graph.connectedComponents(edges, "s", "d"))._2
+    assert((pr, ppr, bfs, lpa, cc) == ((23, 26, 14, 13, 23)))
+  }
+
+  test("bfsLevels: every level's visited anti-join broadcasts in the initial plan") {
+    // Each level checkpoints with its exact row count as statistics, so
+    // the size estimate of the visited set does not compound from level
+    // to level: the anti-join is a broadcast before AQE sees a shuffle.
+    val anti = scala.collection.mutable.ListBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        anti.synchronized {
+          anti ++= qe.sparkPlan.collect {
+            case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+                if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j.nodeName
+          }
+        }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val edges = (1L to 7L).map(i => (i, i + 1)).toDF("u", "v")
+      val levels = Graph.bfsLevels(edges, "u", "v", Seq(1L).toDF("id"), maxDepth = 6)
+      org.apache.spark.graftbridge.ListenerBusDrain.drain(spark.sparkContext)
+      assert(anti.synchronized(anti.toList) == List.fill(6)("BroadcastHashJoin"))
+      assert(levels.collect().map(r => r.getAs[Long]("id") -> r.getAs[Int]("dist")).toSet ==
+        (0 to 6).map(d => (d + 1L) -> d).toSet)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("codegen cache: a third round of the graph operators compiles almost nothing") {
@@ -465,24 +497,23 @@ class InferenceSpec extends SparkSpec {
       Graph.connectedComponents(edges, "s", "d").collect()
     }
     val compiles = (1 to 3).map(_ => compilesDuring(round())._2)
+    info(s"compiles per round: ${compiles.mkString(", ")}")
     assert(compiles.last < 20L, s"compiles per round: ${compiles.mkString(", ")}")
   }
 
   test("bfsLevels: a deeper level reuses the code of a shallower one") {
-    // Level 3 plans like level 2, so it must compile nothing once a
-    // maxDepth = 2 run has compiled level 2; a per-level literal in the
-    // generated source would compile level 3 afresh. (From level 4 the
-    // visited set's size estimate passes the broadcast threshold and
-    // the anti-join plans differently, so that level has code of its own.)
+    // Levels 3 to 6 plan like level 2, so they must compile nothing once
+    // a maxDepth = 2 run has compiled level 2; a per-level literal in the
+    // generated source would compile each level afresh.
     // Int ids: no other spec runs bfsLevels on them, so the codegen cache
     // holds no level of these plans when the test starts.
-    val edges = (1 to 6).map(i => (i, i + 1)).toDF("u", "v") // no level empty
+    val edges = (1 to 7).map(i => (i, i + 1)).toDF("u", "v") // no level empty
     val seed = Seq(1).toDF("id")
     assert(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 2).collect().length == 3)
-    val (three, compiles) =
-      compilesDuring(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 3).collect())
-    assert(three.map(r => r.getAs[Int]("id") -> r.getAs[Int]("dist")).toSet ==
-      (0 to 3).map(d => (d + 1) -> d).toSet)
+    val (six, compiles) =
+      compilesDuring(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 6).collect())
+    assert(six.map(r => r.getAs[Int]("id") -> r.getAs[Int]("dist")).toSet ==
+      (0 to 6).map(d => (d + 1) -> d).toSet)
     assert(compiles == 0L)
   }
 
