@@ -51,7 +51,7 @@ object GraftSession {
       // so read as long and convert in sources.Tables.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Session for local tools/tests: local[cpus] from SPARK_GRAFT_CPUS. */
+  /** Session for local tools/tests: local[cpus] from SPARK_GRAFT_CPUS (default 4). */
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()

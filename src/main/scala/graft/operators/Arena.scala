@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object Arena {
 
+  /** Most win-matrix rows [[bradleyTerry]] collects: the ≤ T(T−1)/2
+    * pairs of a roster of about 450 contenders. */
+  private val MaxMatrixRows = 100000
+
   /** Head-to-head win matrix from per-(contender, trial) integer
     * scores: for every unordered pair meeting on a trial, who scored
     * higher. Output per (a < b): meetings, wins, ties, and a's win
@@ -47,19 +51,16 @@ object Arena {
     * one 4dp round at the very end — the iteration count is fixed, so
     * both engines run the identical float recursion.
     *
-    * Everything after [[winMatrix]] is roster-bounded; the loop is a
-    * fixed unroll of broadcast-sized joins (same posture as the BPE
-    * merge induction: bounded driver-free rounds).
+    * Everything after [[winMatrix]] is roster-bounded: the fit runs on
+    * the driver over at most `MaxMatrixRows` collected rows, and throws
+    * an IllegalArgumentException past them.
     */
   def bradleyTerry(matrix: DataFrame, iters: Int): DataFrame = {
     // The win matrix is ROSTER-bounded (≤ T² rows for T contenders — a
     // model roster, not the corpus), so the MM iteration is a bounded
-    // driver contract like the MMR/BPE argmax steps: one collect of the
-    // ≤T² matrix, the fixed `iters` float recursion locally, and a
-    // T-row literal result. The previous shape ran the same recursion
-    // as ~3 eager localCheckpoint jobs per round of broadcast-sized
-    // joins (measured 1.5 s wall / 0.2 s cpu at sf0.1 — serial job
-    // latency, zero data-sized work). Iteration order is pinned by
+    // driver contract like the MMR/BPE argmax steps: one bounded
+    // collect of the ≤T² matrix, the fixed `iters` float recursion
+    // locally, and a T-row literal result. Iteration order is pinned by
     // sorting keys on their string form, so the double sequence is
     // deterministic run-to-run; values land inside the 4-dp output
     // round exactly as before.
@@ -67,7 +68,10 @@ object Arena {
     val mType = matrix.schema("a").dataType
     val rows = matrix
       .select(col("a"), col("b"), col("wins_a").cast("long"), col("wins_b").cast("long"))
-      .collect()
+      .limit(MaxMatrixRows + 1).collect()
+    if (rows.length > MaxMatrixRows)
+      throw new IllegalArgumentException(
+        s"bradleyTerry: the win matrix has more than $MaxMatrixRows rows, not a model roster")
     // a null win count is no decided game for that side: 0 wins
     def wins(r: org.apache.spark.sql.Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     // symmetric decided-games view: (i, j, w_i, n_ij) both directions
@@ -77,9 +81,9 @@ object Arena {
       if (ng > 0) Seq((a, b, wa, ng), (b, a, wb, ng)) else Seq.empty
     }
     val keys = sym.map(_._1).distinct.sortBy(_.toString)
-    val wi = keys.map(k => k -> sym.filter(_._1 == k).map(_._3).sum.toDouble).toMap
-    val games = keys.map(k => k -> sym.filter(_._1 == k).map(_._4).sum).toMap
-    val byI = keys.map(k => k -> sym.filter(_._1 == k).sortBy(_._2.toString)).toMap
+    val byI = sym.groupBy(_._1).view.mapValues(_.sortBy(_._2.toString)).toMap
+    val wi = byI.view.mapValues(_.map(_._3).sum.toDouble).toMap
+    val games = byI.view.mapValues(_.map(_._4).sum).toMap
     var p = keys.map(k => k -> 1.0).toMap
     for (_ <- 1 to iters) {
       val praw = keys.map { k =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge list — the missing middle of a
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * in O(log n) rounds regardless of component diameter, unlike naive
   * min-label propagation whose round count is the graph diameter (a
   * 10^6-long near-dup chain would need 10^6 shuffles; this needs ~20).
-  * Each round is two aggregate+join shuffles over (long, long) pairs —
-  * ids only, never payloads — so the 100 TB corpus contributes only
-  * its duplicate-pair ids to the iteration.
+  * Each round is three shuffles over (long, long) pairs — two window
+  * minima and one `distinct` — ids only, never payloads, so the 100 TB
+  * corpus contributes only its duplicate-pair ids to the iteration.
   */
 object Graph {
 
@@ -654,17 +655,14 @@ object Graph {
   /** Large-star: for every vertex u, link each strictly-larger
     * neighbor to the minimum of u's closed neighborhood. Keeps large
     * components shrinking toward their minimum in O(log n) rounds.
+    * One shuffle: a window minimum over u. Edges may repeat; the
+    * round's one `distinct` ends the [[smallStar]] that follows.
     */
-  private[operators] def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("m"))
-    sym.join(mins, "u")
+  private[operators] def largeStar(e: DataFrame): DataFrame =
+    bothWays(e, col("u"), col("v"))
+      .withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
       .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
 
   /** Per-vertex local clustering coefficient (Watts & Strogatz 1998):
     * coef(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) for deg ≥ 2.
@@ -707,7 +705,8 @@ object Graph {
     * share one dist, so the distinct and the anti-join see the same ids.
     * The seed level is a projection over the checkpointed ids, so level
     * 1's frontier and visited set broadcast the same ids and AQE reuses
-    * that exchange.
+    * that exchange. The first empty level, whose count its checkpoint
+    * has observed, ends the search.
     */
   def bfsLevels(edges: DataFrame, src: String, dst: String,
                 seed: DataFrame, maxDepth: Int): DataFrame = {
@@ -715,15 +714,16 @@ object Graph {
       .filter(col("u") =!= col("v")).distinct()).df
     // One checkpoint per level, all kept: the visited set is the union
     // of the levels so far, and the result is the union of them all.
-    val seedLevel = Rounds.checkpoint(seed.select("id")).df.withColumn("dist", lit(0))
-    val levels = (1 to maxDepth).foldLeft(Vector(seedLevel)) { (levels, _) =>
-      val frontier = levels.last
-      levels :+ Rounds.checkpoint(frontier.join(sym, frontier("id") === sym("u"))
+    val seedLevel = Rounds.checkpoint(seed.select("id"))
+    var levels = Vector(seedLevel.copy(df = seedLevel.df.withColumn("dist", lit(0))))
+    while (levels.size <= maxDepth && levels.last.rows > 0) {
+      val frontier = levels.last.df
+      levels :+= Rounds.checkpoint(frontier.join(sym, frontier("id") === sym("u"))
         .select(col("v").as("id"), (col("dist") + 1).as("dist")).distinct()
-        .join(levels.reduce(_ unionByName _), Seq("id"), "left_anti")).df
+        .join(levels.map(_.df).reduce(_ unionByName _), Seq("id"), "left_anti"))
     }
     Rounds.release(sym)
-    levels.reduce(_ unionByName _)
+    levels.map(_.df).reduce(_ unionByName _)
   }
 
   /** Weighted single-source shortest paths, fixed Bellman-Ford rounds
@@ -1022,16 +1022,16 @@ object Graph {
   }
 
   /** Small-star: orient each edge high→low, then link every smaller
-    * neighbor (and u itself) to the minimum seen.
+    * neighbor (and u itself) to the minimum seen: a window minimum
+    * over u, then the round's `distinct`, two shuffles in all.
     */
-  private[operators] def smallStar(e: DataFrame): DataFrame = {
-    val oriented = e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-    val mins = oriented.groupBy("u").agg(min(col("v")).as("m"))
-    val relinked = oriented.join(mins, "u")
-      .select(col("v").as("u"), col("m").as("v"))
-    val selfEdges = mins.select(col("u"), col("m").as("v"))
-    relinked.unionByName(selfEdges)
+  private[operators] def smallStar(e: DataFrame): DataFrame =
+    e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+      .select(explode(array(
+        struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u"), col("m").as("v")))).as("e"))
+      .select("e.*")
       .filter(col("u") =!= col("v"))
       .distinct()
-  }
 }

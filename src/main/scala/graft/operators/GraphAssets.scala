@@ -25,6 +25,9 @@ import graft.sources.Tables
   *   - re-arm the persist whenever it is found disarmed (unpersist
   *     clears the storage marker too — a bare memo would silently
   *     recompute on every action);
+  *   - re-arm an asset's memoized inputs first: a persisted frame is
+  *     planned against the caches armed when it is persisted, so an
+  *     asset asks for its inputs outside its once-only `memo` build;
   *   - evict dead sessions on access and build under a lock
   *     (TrieMap.getOrElseUpdate may double-evaluate).
   *
@@ -69,24 +72,25 @@ object GraphAssets {
     * internal form (union of both directions, deduped), derived from
     * [[supplierPart]] so the directed build is shared too.
     */
-  def supplierPartSym(t: Tables): DataFrame = memo(t, "supplier_part_sym") {
+  def supplierPartSym(t: Tables): DataFrame = {
     val d = supplierPart(t)
-    d.unionByName(d.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
+    memo(t, "supplier_part_sym")(d.unionByName(d.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().repartition(col("src")))
   }
 
   /** Distinct vertex set of [[supplierPart]] (node-grain, small). */
-  def supplierPartNodes(t: Tables): DataFrame = memo(t, "supplier_part_nodes") {
-    Graph.pageRankNodes(supplierPart(t))
+  def supplierPartNodes(t: Tables): DataFrame = {
+    val d = supplierPart(t)
+    memo(t, "supplier_part_nodes")(Graph.pageRankNodes(d))
   }
 
   /** [[Graph.pageRankAugment]] of [[supplierPart]]: the per-round
     * input of the PageRank power iteration, memoized so repeated runs
     * skip the degree join + dangling anti-join entirely.
     */
-  def supplierPartAug(t: Tables): DataFrame = memo(t, "supplier_part_aug") {
-    Graph.pageRankAugment(supplierPart(t), supplierPartNodes(t))
+  def supplierPartAug(t: Tables): DataFrame = {
+    val (d, v) = (supplierPart(t), supplierPartNodes(t))
+    memo(t, "supplier_part_aug")(Graph.pageRankAugment(d, v))
   }
 
   /** Co-purchase part graph: (pa, pb, n) for part pairs co-ordered in

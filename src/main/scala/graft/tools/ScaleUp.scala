@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * <outDir> [factor]` writes a factor× (default 10×) copy of a
   * testdata directory so Bench can measure how each query's wall time
   * scales with data volume — the 100 TB posture argued from plan
-  * shapes, tested at one order of magnitude.
+  * shapes, tested at one order of magnitude. Runs on [[graft.GraftSession.local]].
   *
   * Construction: facts and mid-size dims replicate as `factor`
   * disjoint key-shifted copies (join fan-outs and per-key densities
@@ -32,9 +32,7 @@ object ScaleUp {
     val inDir = args(0)
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -6,7 +6,7 @@ import graft.{GraftSession, SparkEntry}
   * the "are the session defaults actually the right ones at scale"
   * check a tuning doc should cite numbers for, not vibes.
   *
-  *   SPARK_GRAFT_SF_DIR=benchdata/sf3 SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=benchdata/sf3 SPARK_GRAFT_CPUS=4 \
   *     SPARK_GRAFT_QUERIES=q_a,q_b java -cp ... graft.tools.Sensitivity
   *
   * Protocol: WITHIN-QUERY INTERLEAVING. For each query, one untimed
@@ -51,9 +51,7 @@ object Sensitivity {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "benchdata/sf3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val subset = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
     val selected = subset.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))

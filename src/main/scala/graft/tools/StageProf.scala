@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * phase (`build`, while the query function builds its DataFrame, or
   * `exec`, while the frame is written) and by the graft call site whose
   * SQL execution launched them, the innermost graft frame outside the
-  * round checkpoint helper. Usage:
+  * round checkpoint helper. Usage (on [[graft.GraftSession.local]]):
   *   runMain graft.tools.StageProf <dir> <q1,q2,...>
   */
 object StageProf {
@@ -35,10 +35,8 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args(1).split(",").toSeq else Seq("q_spearman")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = graft.GraftSession.local()
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
     @volatile var record = false
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val siteOfExecution = new ConcurrentHashMap[String, String]()

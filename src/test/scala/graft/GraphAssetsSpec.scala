@@ -41,6 +41,23 @@ class GraphAssetsSpec extends SparkSpec {
       Graph.richClub(rawSupplierPart, "src", "dst", Seq(4L, 8L, 16L, 32L)))
   }
 
+  test("after a cache clear, an asset re-arms the assets it is built from") {
+    // supplierPartAug is built on supplierPart; left disarmed, supplierPart
+    // is recomputed from lineitem inside both supplierPartNodes and the aug.
+    val d = GraphAssets.supplierPart(t)
+    GraphAssets.supplierPartAug(t).count()
+    spark.catalog.clearCache()
+    assert(d.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // as q_pagerank asks for them: the aug, then the node set
+    val (_, jobs) = jobsDuring {
+      val aug = GraphAssets.supplierPartAug(t)
+      GraphAssets.supplierPartNodes(t).count()
+      aug.count()
+    }
+    assert(d.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(jobs == 13)
+  }
+
   test("assets survive an external unpersist (re-armed persist recomputes once, silently)") {
     val a = GraphAssets.supplierPart(t)
     val n = a.count()

@@ -446,7 +446,21 @@ class InferenceSpec extends SparkSpec {
     val bfs = jobsDuring(Graph.bfsLevels(edges, "s", "d", seeds, maxDepth = 3))._2
     val lpa = jobsDuring(Graph.labelPropagation(edges, "s", "d", iters = 3))._2
     val cc = jobsDuring(Graph.connectedComponents(edges, "s", "d"))._2
-    assert((pr, ppr, bfs, lpa, cc) == ((23, 26, 14, 13, 23)))
+    assert((pr, ppr, bfs, lpa, cc) == ((23, 26, 14, 13, 14)))
+  }
+
+  test("bfsLevels: a search that ends before maxDepth runs no job past its first empty level") {
+    // Levels 0-2 hold 1, 2 and 3; level 3 is empty, so levels 4-6 would
+    // expand an empty frontier. maxDepth 6 must cost what maxDepth 3 costs.
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("u", "v")
+    val seed = Seq(1L).toDF("id")
+    val (three, jobs3) = jobsDuring(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 3))
+    val (six, jobs6) = jobsDuring(Graph.bfsLevels(edges, "u", "v", seed, maxDepth = 6))
+    assert(jobs6 == jobs3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[Long]("id") -> r.getAs[Int]("dist")).toSet
+    assert(rows(six) == Set(1L -> 0, 2L -> 1, 3L -> 2))
+    assert(rows(three) == rows(six))
   }
 
   test("bfsLevels: every level's visited anti-join broadcasts in the initial plan") {

@@ -49,6 +49,18 @@ class R14OptSpec extends SparkSpec {
     assert(got === Arena.bradleyTerry(zeros, iters = 3).orderBy("m").collect())
   }
 
+  test("bradleyTerry refuses a win matrix one row over its collect bound") {
+    // Few contenders but bound + 1 rows (repeated pairs): the bound is
+    // on the rows the driver would collect, not on the roster.
+    val bound = 100000 // Arena.MaxMatrixRows
+    def matrix(rows: Long) = spark.range(rows).select(
+      (col("id") % 5).cast("string").as("a"), (col("id") % 5 + 1).cast("string").as("b"),
+      lit(2L).as("wins_a"), lit(1L).as("wins_b"))
+    val e = intercept[IllegalArgumentException](Arena.bradleyTerry(matrix(bound + 1L), iters = 1))
+    assert(e.getMessage.contains("bradleyTerry") && e.getMessage.contains(s"$bound rows"))
+    assert(Arena.bradleyTerry(matrix(bound), iters = 1).count() == 6L)
+  }
+
   test("mahalanobisScreen struct-argmax keeps the min-id-among-max tiebreak") {
     // Points symmetric about the mean have identical d2 (quadratic
     // form in centered coordinates), so (4,7) and (-4,-7) tie for the

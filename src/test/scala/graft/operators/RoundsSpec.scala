@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
@@ -46,6 +48,47 @@ class RoundsSpec extends graft.SparkSpec {
       assert(broadcasts(state(10)))
       assert(!broadcasts(state(100)))
     } finally spark.conf.set(threshold, saved)
+  }
+
+  test("star steps: one shuffle per minimum, and the aggregate-then-join round's edge set") {
+    // Shuffles in the plan before AQE runs it: a window minimum is one,
+    // and the round's one distinct (in smallStar) another.
+    def shuffles(df: DataFrame): Int = (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case x: ShuffleExchangeLike => x }.size
+    val probe = Seq((1L, 2L), (2L, 3L)).toDF("u", "v").localCheckpoint(true)
+    assert(shuffles(Graph.largeStar(probe)) == 1)
+    assert(shuffles(Graph.smallStar(probe)) == 2)
+    // The round as it was before the window form: each star step an
+    // aggregate, a join back and a distinct (Kiveris et al. 2014).
+    def largeRef(e: DataFrame) = {
+      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
+        .select(col("u"), least(col("mv"), col("u")).as("m"))
+      sym.join(mins, "u").filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v")).filter(col("u") =!= col("v")).distinct()
+    }
+    def smallRef(e: DataFrame) = {
+      val oriented = e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      val mins = oriented.groupBy("u").agg(min(col("v")).as("m"))
+      oriented.join(mins, "u").select(col("v").as("u"), col("m").as("v"))
+        .unionByName(mins.select(col("u"), col("m").as("v")))
+        .filter(col("u") =!= col("v")).distinct()
+    }
+    val rnd = new scala.util.Random(7)
+    for (n <- Seq(12, 40)) {
+      var e = Seq.fill(2 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter(p => p._1 != p._2).distinct.toDF("u", "v")
+      var ref = e
+      for (_ <- 1 to 3) {
+        assert(Graph.largeStar(e).collect().toSet == largeRef(e).collect().toSet)
+        e = Graph.smallStar(Graph.largeStar(e)).localCheckpoint(true)
+        ref = smallRef(largeRef(ref)).localCheckpoint(true)
+        assert(e.collect().toSet == ref.collect().toSet)
+        assert(e.count() == e.distinct().count())
+      }
+    }
   }
 
   test("connectedComponents: the observed signature and round count match separate head() jobs") {
