@@ -194,7 +194,7 @@ object TextDedup {
 
   /** Engine-portable (md5-hex) MinHash signature of a shingle array —
     * the per-chunk building block of [[mergeSignatures]]; identical to
-    * the signature inside minhashNearDupsPortableReleasable. Native
+    * the signature of the md5 family in [[minhashNearDupsPortable]]. Native
     * expression (graft.plans.PortableMinHashSig) — the interpreted-HOF
     * form ([[portableSignatureHof]], bit-identical, spec-pinned) pays
     * a concat + full hex encode + substring + array per (shingle, i).
@@ -238,17 +238,122 @@ object TextDedup {
       i => array_min(transform(shingles, s => xxhash64(s, i)))
     )
 
-  /** LSH banding: (band, xxhash64(band slice)) pairs for bucket joins. */
-  def lshBands(signature: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      j => struct(j.as("band"), xxhash64(slice(signature, j * rows + 1, lit(rows))).as("bh"))
-    )
+  /** The hash family of one MinHash-LSH run; it picks the signature and
+    * the band key together. [[XxHash]] is the performance path (native
+    * codegen, long band keys). [[Md5]] is the engine-portable family:
+    * h_i(s) = first 16 hex of md5(salt ++ s ++ ":" ++ i) and the band
+    * key is the concatenated member minima, so every step is
+    * reproducible by any engine with md5 and the pipeline is
+    * oracle-checkable end to end. A different salt is an INDEPENDENT
+    * family: two runs collide independently per pair, which is what a
+    * capture-recapture estimate needs (re-banding one signature set
+    * only nests the captures).
+    */
+  private sealed trait HashFamily {
+    def signature(shingles: Column, h: Int): Column
+    def bandKey(members: Column): Column
+  }
+  private case object XxHash extends HashFamily {
+    def signature(shingles: Column, h: Int): Column = minhashSignature(shingles, h)
+    def bandKey(members: Column): Column = xxhash64(members)
+  }
+  private final case class Md5(salt: String) extends HashFamily {
+    def signature(shingles: Column, h: Int): Column =
+      graft.plans.PortableMinHashSig(shingles, h, salt)
+    def bandKey(members: Column): Column = concat_ws("", members)
+  }
+
+  /** LSH banding: the `keep` columns plus one (band, bh) row per band
+    * of the `shingles` column's signature. The signature is a NAMED
+    * column in its own projection before the band explode references
+    * it: higher-order-function lambdas get no common-subexpression
+    * elimination, so a signature inlined into the band lambda would
+    * recompute all h hashes once PER BAND.
+    */
+  private def banded(df: DataFrame, keep: Seq[String], shingles: String,
+                     family: HashFamily, h: Int, bands: Int): DataFrame = {
+    val rows = h / bands
+    val kept = keep.map(col)
+    df.select(kept :+ family.signature(col(shingles), h).as("sig"): _*)
+      .select(kept :+ explode(transform(sequence(lit(0), lit(bands - 1)), j =>
+        struct(j.as("band"), family.bandKey(slice(col("sig"), j * rows + 1, lit(rows))).as("bh"))))
+        .as("b"): _*)
+      .select(kept :+ col("b.band") :+ col("b.bh"): _*)
+  }
+
+  /** Bucket self-join on (band, bh): only ids travel. id_a < id_b
+    * halves the pairs; distinct collapses multi-band collisions.
+    */
+  private def candidatePairs(banded: DataFrame): DataFrame =
+    banded.as("x")
+      .join(banded.as("y"), Seq("band", "bh"))
+      .filter(col("x.id") < col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+      .distinct()
+
+  /** Joins shingles back for the candidates only and keeps the pairs
+    * whose true Jaccard is ≥ minJaccard. The md5 family's pairs are
+    * compared against an oracle, so its Jaccard is rounded to 4 dp.
+    *
+    * shuffle_hash, candidate side as build: the shingle table's stats
+    * dip under the auto-broadcast threshold at mid scale and the
+    * measured broadcast of array-heavy shingles loses to a shuffle join
+    * (TUNING.md round 9 — q_lsh_eval 10.2 s default vs 4.1 s suppressed
+    * at sf3); at corpus scale broadcasting shingles is never viable, so
+    * the hint is also the plan that survives 100 TB.
+    */
+  private def verifiedPairs(candidates: DataFrame, shingled: DataFrame,
+                            family: HashFamily, minJaccard: Double): DataFrame = {
+    val exact = TextAnalysis.jaccard(col("sh_a"), col("sh_b"))
+    candidates
+      .hint("shuffle_hash")
+      .join(shingled.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
+      .hint("shuffle_hash")
+      .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        (if (family == XxHash) exact else round(exact, 4)).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
+  }
+
+  /** One MinHash-LSH run: candidate pairs, verified (id_a, id_b,
+    * jaccard) pairs, and the handle of the persisted shingle and band
+    * tables.
+    */
+  private final case class LshPairs(candidates: DataFrame, verified: DataFrame, handle: CacheHandle)
+
+  /** The MinHash-LSH pipeline behind every near-dup pair operator:
+    * shingle → signature → band → bucket self-join → Jaccard verify.
+    *
+    * Two persists, both ids-and-shingles only (MEMORY_AND_DISK: the
+    * shingle cache is ~2% of raw text, the band table holds no text):
+    * the shingle table is read three times (banding and both sides of
+    * the verify join), and the band table feeds both sides of the
+    * self-join, which a broadcast join evaluates independently (it
+    * reuses no exchange) — unpersisted, the signatures would be
+    * computed TWICE, measured as the dominant cost of the operator.
+    * `pinCandidates` lets a caller materialize the candidate pairs
+    * before the verify join reads them.
+    */
+  private def minhashLsh(docs: DataFrame, idCol: String, textCol: String, ngram: Int,
+                         h: Int, bands: Int, minJaccard: Double, family: HashFamily,
+                         pinCandidates: DataFrame => DataFrame = identity): LshPairs = {
+    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val handle = CacheHandle()
+    val shingled = handle.track(docs
+      .select(col(idCol).as("id"), TextAnalysis.wordNgrams(col(textCol), ngram).as("shingles"))
+      .filter(size(col("shingles")) > 0)
+      .persist(storage))
+    val bandTable = handle.track(
+      banded(shingled, Seq("id"), "shingles", family, h, bands).persist(storage))
+    val candidates = pinCandidates(candidatePairs(bandTable))
+    LshPairs(candidates, verifiedPairs(candidates, shingled, family, minJaccard), handle)
+  }
 
   /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
     *
     * docs(idCol, textCol) → (id_a, id_b, jaccard) for pairs that collide
-    * in ≥1 band and whose true shingle Jaccard ≥ minJaccard.
+    * in ≥1 band and whose true shingle Jaccard ≥ minJaccard. xxhash64
+    * family; the Jaccard is not rounded.
     */
   def minhashNearDups(
       docs: DataFrame,
@@ -259,80 +364,14 @@ object TextDedup {
       bands: Int = 16,
       minJaccard: Double = 0.5
   ): DataFrame =
-    minhashNearDupsReleasable(docs, idCol, textCol, ngram, h, bands, minJaccard)._1
+    minhashLsh(docs, idCol, textCol, ngram, h, bands, minJaccard, XxHash).verified
 
-  /** minhashNearDups with a [[CacheHandle]] for the persisted shingle
-    * and band tables (see CacheHandle's doc for the contract).
-    *
-    * `storage`: the shingle cache is ~2% of raw text and the band
-    * table is ids-only, so MEMORY_AND_DISK is usually fine even at
-    * scale — pass StorageLevel.DISK_ONLY when executor memory is the
-    * contended resource.
-    */
-  def minhashNearDupsReleasable(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      ngram: Int = 3,
-      h: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-  ): (DataFrame, CacheHandle) = {
-    val handle = CacheHandle()
-    val rows = h / bands
-    // persisted: read three times (banding + both sides of the verify
-    // join); shingles are ~2% the size of the raw text, so at cluster
-    // scale this is a cheap cache, not a correctness requirement.
-    val shingled = handle.track(docs
-      .select(col(idCol).as("id"), TextAnalysis.wordNgrams(col(textCol), ngram).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .persist(storage))
-
-    // Also persisted: the self-join below evaluates its left and right
-    // side independently (a broadcast join reuses no exchange), so an
-    // unpersisted banded plan would compute the 64-hash signatures
-    // TWICE — measured as the dominant cost of the whole operator. The
-    // cache is (id, band, bh) rows: bands × corpus ids, no text.
-    val banded = handle.track(shingled
-      .select(col("id"), explode(lshBands(minhashSignature(col("shingles"), h), bands, rows)).as("b"))
-      .select(col("id"), col("b.band"), col("b.bh"))
-      .persist(storage))
-
-    // Bucket join on (band, bh): only ids travel. Self-join with id_a <
-    // id_b halves the pairs; distinct collapses multi-band collisions.
-    val candidates = banded.as("x")
-      .join(banded.as("y"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-
-    // Join shingles back for candidates only, verify true Jaccard.
-    // shuffle_hash, candidate side as build: the shingle table's stats
-    // dip under the auto-broadcast threshold at mid scale and
-    // broadcasting array-heavy shingles measures slower than a shuffle
-    // join (TUNING.md round 9); at corpus scale it is never viable.
-    val verified = candidates
-      .hint("shuffle_hash")
-      .join(shingled.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .hint("shuffle_hash")
-      .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"), TextAnalysis.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-    (verified, handle)
-  }
-
-  /** Engine-portable MinHash-LSH near-dups: identical algorithm to
-    * minhashNearDups but the permutation hashes are md5-hex prefixes
-    * (h_i(s) = first 16 hex of md5(s ":" i)) and band keys are the
-    * concatenated member minima — every step reproducible by any
-    * engine with md5, so the FULL pipeline (shingle → signature →
-    * band → bucket join → Jaccard verify) is oracle-checkable, not
-    * just spec-checked. The xxhash64 variant remains the performance
-    * path (native codegen, longs); this one exists to PROVE the
-    * algorithm end-to-end and uses the same candidate/verify plan
-    * shape.
+  /** Engine-portable MinHash-LSH near-dups: the pipeline of
+    * [[minhashNearDups]] with the md5 hash family, so the FULL pipeline
+    * (shingle → signature → band → bucket join → Jaccard verify) is
+    * oracle-checkable, not just spec-checked; the Jaccard is rounded
+    * to 4 dp. `saltPrefix` selects an independent md5 family (see
+    * [[HashFamily]]).
     */
   def minhashNearDupsPortable(
       docs: DataFrame,
@@ -344,69 +383,7 @@ object TextDedup {
       minJaccard: Double = 0.5,
       saltPrefix: String = ""
   ): DataFrame =
-    minhashNearDupsPortableReleasable(
-      docs, idCol, textCol, ngram, h, bands, minJaccard,
-      saltPrefix = saltPrefix)._1
-
-  /** minhashNearDupsPortable with a [[CacheHandle]] for its persisted
-    * intermediates (see CacheHandle's doc for the contract).
-    *
-    * `saltPrefix` selects an INDEPENDENT md5 hash family
-    * (h_i(s) = md5(saltPrefix ++ s ++ ":" ++ i)): two runs with
-    * different salts collide independently per pair, which is what a
-    * capture-recapture estimate needs — re-banding one signature set
-    * only nests the captures.
-    */
-  def minhashNearDupsPortableReleasable(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      ngram: Int = 3,
-      h: Int = 16,
-      bands: Int = 4,
-      minJaccard: Double = 0.5,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
-      saltPrefix: String = ""
-  ): (DataFrame, CacheHandle) = {
-    val handle = CacheHandle()
-    val rows = h / bands
-    // Persisted like the xxhash64 variant: the self-join and the
-    // verify join would otherwise recompute the interpreted-md5
-    // signature lambdas per reference — measured as the dominant cost.
-    val shingled = handle.track(docs
-      .select(col(idCol).as("id"), TextAnalysis.wordNgrams(col(textCol), ngram).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .persist(storage))
-    // Native md5-minhash (graft.plans.PortableMinHashSig) — the
-    // interpreted-HOF form is bit-identical but pays per-(shingle, i)
-    // string churn; the oracle inlines the HOF semantics unchanged.
-    val sig = graft.plans.PortableMinHashSig(col("shingles"), h, saltPrefix)
-    val banded = shingled
-      .select(col("id"), sig.as("sig"))
-      .select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)), j =>
-          struct(j.as("band"), concat_ws("", slice(col("sig"), j * rows + 1, lit(rows))).as("bh")))).as("b"))
-      .select(col("id"), col("b.band"), col("b.bh"))
-      .persist(storage)
-    handle.track(banded)
-    val candidates = banded.as("x")
-      .join(banded.as("y"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    // Same shuffle_hash verify-join posture as the xxhash64 variant.
-    val sh = shingled.select(col("id"), col("shingles"))
-    val verified = candidates
-      .hint("shuffle_hash")
-      .join(sh.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .hint("shuffle_hash")
-      .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(TextAnalysis.jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-    (verified, handle)
-  }
+    minhashLsh(docs, idCol, textCol, ngram, h, bands, minJaccard, Md5(saltPrefix)).verified
 
   /** N-gram coverage of a held-out test slice by the training corpus —
     * the decontamination question asked the other way round: not "did
@@ -442,56 +419,29 @@ object TextDedup {
   /** Recall/precision evaluation of the portable MinHash-LSH chain
     * against a KNOWN truth pair set — "eval the dedup operator" as a
     * first-class query: a curation run that cannot state its near-dup
-    * recall cannot defend its dedup rate. Reuses the exact
-    * [[minhashNearDupsPortable]] construction (shingle → md5 signature
-    * → bands → bucket join → Jaccard verify) and reports, in one row:
-    * truth size, candidate volume, verified pairs, truth pairs found
-    * at each stage, end-to-end recall and the candidate verify-rate —
-    * the two ppm ratios exact by integer division.
+    * recall cannot defend its dedup rate. Runs the pipeline of
+    * [[minhashNearDupsPortable]] (shingle → md5 signature → bands →
+    * bucket join → Jaccard verify) and reports, in one row: truth
+    * size, candidate volume, verified pairs, truth pairs found at each
+    * stage, end-to-end recall and the candidate verify-rate — the two
+    * ppm ratios exact by integer division.
     *
     * `truth` carries canonical (id_a < id_b) pair columns. Scale
     * shape: identical to the production chain plus two broadcast-sized
     * count joins; the truth set joins on (id_a, id_b) — id-only rows.
+    * The candidate and verified pairs are checkpointed so the five
+    * counting consumers read each once; the pipeline's own persists
+    * are released once both checkpoints exist.
     */
   def lshDedupEval(docs: DataFrame, idCol: String, textCol: String,
                    truth: DataFrame,
                    ngram: Int = 3, h: Int = 8, bands: Int = 4,
                    minJaccard: Double = 0.5): DataFrame = {
-    val rows = h / bands
-    val shingled = docs
-      .select(col(idCol).as("id"), TextAnalysis.wordNgrams(col(textCol), ngram).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .localCheckpoint(true)
-    // Native md5-minhash, bit-identical to the HOF form the oracle inlines.
-    val sig = graft.plans.PortableMinHashSig(col("shingles"), h)
-    val banded = shingled
-      .select(col("id"), sig.as("sig"))
-      .select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)), j =>
-          struct(j.as("band"), concat_ws("", slice(col("sig"), j * rows + 1, lit(rows))).as("bh")))).as("b"))
-      .select(col("id"), col("b.band"), col("b.bh"))
-    val candidates = banded.as("x")
-      .join(banded.as("y"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(true)
-    // shuffle_hash with the CANDIDATE-bounded side as build: the
-    // shingle table's stats sit under the auto-broadcast threshold at
-    // mid scale and the measured broadcast of array-heavy shingles
-    // loses (same mis-fire as the graph score tables, TUNING.md round
-    // 9 — q_lsh_eval 10.2 s default vs 4.1 s suppressed at sf3); at
-    // corpus scale broadcasting shingles is never viable, so the hint
-    // is also the plan that survives 100 TB.
-    val sh = shingled.select(col("id"), col("shingles"))
-    val verified = candidates
-      .hint("shuffle_hash")
-      .join(sh.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .hint("shuffle_hash")
-      .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .filter(round(TextAnalysis.jaccard(col("sh_a"), col("sh_b")), 4) >= minJaccard)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
+    val run = minhashLsh(docs, idCol, textCol, ngram, h, bands, minJaccard, Md5(""),
+      pinCandidates = _.localCheckpoint(true))
+    val candidates = run.candidates
+    val verified = run.verified.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    run.handle.release()
     val tr = truth.select(col("id_a"), col("id_b"))
     val out = tr.agg(count(lit(1)).as("n_truth"))
       .crossJoin(candidates.agg(count(lit(1)).as("n_candidates")))
@@ -508,27 +458,6 @@ object TextDedup {
         .as("verify_rate_ppm"))
   }
 
-  /** Near-duplicate flagging of an incoming stream AGAINST A STATIC
-    * reference corpus — the continuous-ingest form of near-dedup: a
-    * harvested batch lands, and every new document is checked against
-    * the already-curated corpus without recomputing anything on the
-    * reference side.
-    *
-    * Completely state-free on the stream: each incoming doc computes
-    * its banded MinHash per-row (map-only), stream-static joins the
-    * reference's banded table on (band, bh), and verifies true
-    * Jaccard against reference shingles. The only streaming state is
-    * the within-watermark pair dedup (multi-band collisions of the
-    * same pair). At 100 TB the reference tables are persisted once
-    * (returned handle) and re-read per micro-batch — write them
-    * bucketed by (band, bh) via Sinks.writeBucketed for co-located
-    * probe joins.
-    *
-    * `portable = true` switches both sides to the md5 signature basis
-    * (engine-reproducible, oracle-checkable batch twin); the default
-    * xxhash64 path is the codegen perf form. Batch inputs get the
-    * deterministic twin: same joins, plain distinct.
-    */
   /** Per-bucket first occupant kept as streaming state. */
   final case class BucketFirst(firstId: Long, firstMs: Long)
   /** A later arrival colliding with its bucket's first occupant. */
@@ -568,20 +497,16 @@ object TextDedup {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = stream.sparkSession
     import spark.implicits._
-    val rows = h / bands
-    val banded = stream
+    val shingled = stream
       .withWatermark(tsCol, watermarkDelay)
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
         TextAnalysis.wordNgrams(col(textCol), ngram).as("__sh"))
       .filter(size(col("__sh")) > 0)
-      .select(col("id"), col("ts"), minhashSignature(col("__sh"), h).as("__sig"))
-      .select(col("id"), col("ts"), explode(lshBands(col("__sig"), bands, rows)).as("b"))
-      // the watermarked TIMESTAMP column must reach the stateful
-      // operator itself for event-time timeout to resolve
-      .select(col("id"), col("ts"),
-        col("b.band").as("band"), col("b.bh").cast("string").as("bh"))
+    // the watermarked TIMESTAMP column must reach the stateful
+    // operator itself for event-time timeout to resolve
+    banded(shingled, Seq("id", "ts"), "__sh", XxHash, h, bands)
+      .select(col("id"), col("ts"), col("band"), col("bh").cast("string").as("bh"))
       .as[(Long, java.sql.Timestamp, Int, String)]
-    banded
       .groupByKey { case (_, _, band, bh) => (band, bh) }
       .flatMapGroupsWithState[BucketFirst, StreamDupHit](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()
@@ -613,6 +538,27 @@ object TextDedup {
       }
   }
 
+  /** Near-duplicate flagging of an incoming stream AGAINST A STATIC
+    * reference corpus — the continuous-ingest form of near-dedup: a
+    * harvested batch lands, and every new document is checked against
+    * the already-curated corpus without recomputing anything on the
+    * reference side.
+    *
+    * Completely state-free on the stream: each incoming doc computes
+    * its banded MinHash per-row (map-only), stream-static joins the
+    * reference's banded table on (band, bh), and verifies true
+    * Jaccard against reference shingles. The only streaming state is
+    * the within-watermark pair dedup (multi-band collisions of the
+    * same pair). At 100 TB the reference tables are persisted once
+    * (returned handle) and re-read per micro-batch — write them
+    * bucketed by (band, bh) via Sinks.writeBucketed for co-located
+    * probe joins.
+    *
+    * `portable = true` switches both sides to the md5 signature basis
+    * (engine-reproducible, oracle-checkable batch twin); the default
+    * xxhash64 path is the codegen perf form. Batch inputs get the
+    * deterministic twin: same joins, plain distinct.
+    */
   def nearDupsAgainstReferenceReleasable(
       stream: DataFrame,
       reference: DataFrame,
@@ -629,39 +575,20 @@ object TextDedup {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   ): (DataFrame, CacheHandle) = {
     val handle = CacheHandle()
-    val rows = h / bands
-    def shingle(df: DataFrame, as: String) = df
-      .select(col(idCol).as(as), col(textCol).as("__t"))
-      .select(col(as), TextAnalysis.wordNgrams(col("__t"), ngram).as(s"__sh_$as"))
-      .filter(size(col(s"__sh_$as")) > 0)
-    // The signature is materialized as a NAMED column in its own
-    // projection before the band explode references it — interpreted
-    // HOF lambdas get no CSE, so an inline signature would recompute
-    // all h hashes once PER BAND (measured 4x on the portable path).
-    def sigCol(sh: Column): Column =
-      if (portable) graft.plans.PortableMinHashSig(sh, h)
-      else minhashSignature(sh, h)
-    def bandsOf(sig: Column): Column =
-      if (portable)
-        explode(transform(sequence(lit(0), lit(bands - 1)), j =>
-          struct(j.as("band"), concat_ws("", slice(sig, j * rows + 1, lit(rows))).as("bh"))))
-      else explode(lshBands(sig, bands, rows))
-
-    val refShingled = handle.track(shingle(reference, "ref_id").persist(storage))
-    val refBanded = handle.track(refShingled
-      .select(col("ref_id"), sigCol(col("__sh_ref_id")).as("__sig"))
-      .select(col("ref_id"), bandsOf(col("__sig")).as("b"))
-      .select(col("ref_id"), col("b.band").as("band"), col("b.bh").as("bh"))
+    val family = if (portable) Md5("") else XxHash
+    val refShingled = handle.track(reference
+      .select(col(idCol).as("ref_id"), col(textCol).as("__t"))
+      .select(col("ref_id"), TextAnalysis.wordNgrams(col("__t"), ngram).as("__sh_ref_id"))
+      .filter(size(col("__sh_ref_id")) > 0)
       .persist(storage))
+    val refBanded = handle.track(
+      banded(refShingled, Seq("ref_id"), "__sh_ref_id", family, h, bands).persist(storage))
 
     val probe = stream
       .select(col(idCol).as("id"), col(tsCol).as("__ts"),
         TextAnalysis.wordNgrams(col(textCol), ngram).as("__sh_id"))
       .filter(size(col("__sh_id")) > 0)
-    val cand = probe
-      .select(col("id"), col("__ts"), col("__sh_id"), sigCol(col("__sh_id")).as("__sig"))
-      .select(col("id"), col("__ts"), col("__sh_id"), bandsOf(col("__sig")).as("b"))
-      .select(col("id"), col("__ts"), col("__sh_id"), col("b.band").as("band"), col("b.bh").as("bh"))
+    val cand = banded(probe, Seq("id", "__ts", "__sh_id"), "__sh_id", family, h, bands)
       .join(refBanded, Seq("band", "bh"))
     val verified = cand
       .join(refShingled, "ref_id")

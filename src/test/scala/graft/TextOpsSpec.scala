@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -139,17 +142,64 @@ class TextOpsSpec extends SparkSpec {
     assert(pairs("ac") > 10L)
   }
 
-  test("minhash LSH finds a near-duplicate and skips unrelated docs") {
+  /** Doc 2 is doc 1 plus one token; doc 3 shares no trigram with either. */
+  private def nearDupDocs = {
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the deep green forest tonight"
-    val docs = Seq(
+    Seq(
       (1L, base),
       (2L, base + " again"),
       (3L, "completely different words about databases indexes queries optimizers plans shuffles and joins everywhere")
     ).toDF("doc_id", "text")
+  }
+
+  test("minhash LSH finds a near-duplicate and skips unrelated docs") {
+    val docs = nearDupDocs
     val pairs = TextDedup.minhashNearDups(docs, "doc_id", "text", minJaccard = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+  }
+
+  /** Every expression of `plan`, of its subqueries and of the plans
+    * cached beneath it (an InMemoryRelation's physical plan).
+    */
+  private def allExpressions(plan: QueryPlan[_]): Seq[Expression] =
+    plan.expressions ++ (plan.children ++ plan.innerChildren).flatMap {
+      case p: QueryPlan[_] => allExpressions(p)
+      case _ => Nil
+    }
+
+  test("minhash near-dups: the signature is projected before the band explode, never inside its lambda") {
+    // A higher-order-function lambda gets no common-subexpression
+    // elimination: a signature inside the band lambda is computed once
+    // per band.
+    val docs = nearDupDocs
+    val xx = TextDedup.minhashNearDups(docs, "doc_id", "text", minJaccard = 0.5)
+    val md5 = TextDedup.minhashNearDupsPortable(docs, "doc_id", "text", minJaccard = 0.5)
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))).toSet
+    // the xxhash64 path returns the raw Jaccard, the portable path rounds to 4 dp
+    assert(pairs(xx) == Set((1L, 2L, 17.0 / 18)))
+    assert(pairs(md5) == Set((1L, 2L, 0.9444)))
+    for (df <- Seq(xx, md5)) {
+      val inLambda = allExpressions(df.queryExecution.optimizedPlan).flatMap(_.collect {
+        case l: LambdaFunction => l.collect {
+          case s @ (_: graft.plans.MinHashSig | _: graft.plans.PortableMinHashSig) => s
+        }
+      }).flatten
+      assert(inLambda.isEmpty, s"signature inside a lambda: ${inLambda.mkString(", ")}")
+    }
+  }
+
+  test("minhashNearDupsPortable: job count on the near-dup fixture") {
+    // The portable path runs twice per graph_iter pass (q_fuzzy_dedup
+    // and q_communities). A change may lower the count; raising it
+    // needs a reason written here.
+    spark.catalog.clearCache()
+    val (pairs, jobs) = jobsDuring(
+      TextDedup.minhashNearDupsPortable(nearDupDocs, "doc_id", "text").collect())
+    assert(pairs.length == 1)
+    assert(jobs == 11)
   }
 
   test("bigram LM score: corpus-frequent bigrams score high, rare ones low") {

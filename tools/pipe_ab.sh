@@ -10,6 +10,15 @@
 # parent's interquartile range. No gain is flagged if any run's JSON did
 # not parse or the change failed more operations than the parent.
 #
+# Each end-to-end metric also gets a no-regression verdict, its `bound`
+# in BENCHMARK.json read as a share of the parent median:
+#   worse       the change median is worse than the parent median by
+#               more than the bound;
+#   unresolved  the parent's interquartile range is wider than the
+#               bound, unless every change run beats every parent run;
+#   ok          otherwise.
+# Per-layer metrics have no bound and get "-".
+#
 #   tools/pipe_ab.sh <parent_dir> <change_dir> <workload> [pairs] [seconds] [trace] [outdir]
 #
 # Both checkouts must hold pipebench/; metric directions come from the
@@ -45,6 +54,7 @@ out, pairs, bench = sys.argv[1], int(sys.argv[2]), sys.argv[3]
 with open(bench) as f:
     spec = json.load(f)
 better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+bound = {m["name"]: m["bound"] for m in spec["end_to_end"]}
 
 def load(side, i):
     try:
@@ -74,7 +84,17 @@ def quartiles(v):
     q1, q2, q3 = statistics.quantiles(v, n=4, method="inclusive")
     return q1, q2, q3
 
-print(f"{'metric':24} {'parent q1 / median / q3':>28} {'change q1 / median / q3':>28} {'wins':>6}  gain")
+def verdict(name, pv, cv, pm, iqr, cm, sign):
+    if name not in bound:
+        return "-"
+    allowed = bound[name] * abs(pm)
+    if sign * (cm - pm) > allowed:
+        return "worse"
+    if iqr > allowed and not all(sign * (p - c) > 0 for p in pv for c in cv):
+        return "unresolved"
+    return "ok"
+
+print(f"{'metric':24} {'parent q1 / median / q3':>28} {'change q1 / median / q3':>28} {'wins':>6}  gain  verdict")
 for name in full[0][0]["metrics"]:
     pv = [p["metrics"][name]["value"] for p, _ in full]
     cv = [c["metrics"][name]["value"] for _, c in full]
@@ -84,5 +104,6 @@ for name in full[0][0]["metrics"]:
     gain = gain_possible and wins >= 0.9 * pairs and sign * (pm - cm) > (p3 - p1)
     unit = full[0][0]["metrics"][name]["unit"]
     print(f"{name + ' (' + unit + ')':24} {p1:8.3f} / {pm:8.3f} / {p3:8.3f} "
-          f"{c1:8.3f} / {cm:8.3f} / {c3:8.3f} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no'}")
+          f"{c1:8.3f} / {cm:8.3f} / {c3:8.3f} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no ':4}"
+          f"{verdict(name, pv, cv, pm, p3 - p1, cm, sign)}")
 EOF
