@@ -243,41 +243,34 @@ object DistillerQueries {
       val pubs = t.orders.select(
         k.as("pub_id"), doi.as("doi"), col("o_orderdate").as("updated_at"), dk.as("dk"))
 
-      val keyed = pubs.filter(col("dk").isNotNull)
-      val survivors = Rialto.keepNewest(keyed, Seq("dk"), Seq(col("updated_at"), col("pub_id")))
-      val mapping = keyed.select(col("pub_id").as("old_id"), col("dk"))
-        .join(survivors.select(col("dk"), col("pub_id").as("new_id")), "dk")
-        .select("old_id", "new_id")
-      val merged = mapping.groupBy("new_id").agg(count(lit(1)).as("n_merged"))
+      // one window pass maps every keyed pub to its group's survivor
+      val mapping = Rialto.mergeMap(pubs.filter(col("dk").isNotNull), "pub_id", Seq("dk"),
+        Seq(col("updated_at"), col("pub_id")))
 
-      // no distinct after the remap: the downstream collect_set
-      // dedupes per key, so an extra (pub_id, id) shuffle buys nothing
-      def remap(assoc: DataFrame, idCol: String): DataFrame =
-        assoc.join(mapping, assoc("pub_id") === mapping("old_id"), "left")
-          .select(coalesce(col("new_id"), col("pub_id")).as("pub_id"), col(idCol))
-      def pipedAgg(assoc: DataFrame, idCol: String, outCol: String): DataFrame =
-        assoc.groupBy("pub_id").agg(
-          graft.functions.Normalizers.piped(
-            array_sort(collect_set(col(idCol).cast("string")))).as(outCol))
-
-      val authors = remap(t.lineitem
-        .filter(col("l_linenumber") <= 2 && col("l_suppkey") % 3 =!= 0)
-        .select(col("l_orderkey").as("pub_id"), col("l_suppkey").as("author_id"))
-        .distinct(), "author_id")
-      val funders = remap(t.lineitem
-        .filter(col("l_linenumber") === 1 && col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey").as("pub_id"), col("l_partkey").as("funder_id"))
-        .distinct(), "funder_id")
-
-      val survivorsOnly = pubs
-        .join(mapping.filter(col("old_id") =!= col("new_id"))
-          .select(col("old_id").as("pub_id")), Seq("pub_id"), "left_anti")
-      survivorsOnly
-        // inner join = remove_orphan_publications: pubs without any
+      // author and funder links in ONE lineitem pass, remapped onto the
+      // survivor and aggregated together; collect_set dedupes, so no
+      // distinct() runs before the remap
+      def pipedSet(id: Column): Column =
+        graft.functions.Normalizers.piped(array_sort(collect_set(id.cast("string"))))
+      val author = when(col("l_suppkey") % 3 =!= 0, col("l_suppkey"))
+      val funder = when(col("l_linenumber") === 1 && col("l_partkey") % 4 === 0, col("l_partkey"))
+      val links = t.lineitem.filter(col("l_linenumber") <= 2)
+        .select(col("l_orderkey").as("pub_id"), author.as("author_id"), funder.as("funder_id"))
+      val assoc = links.join(mapping, links("pub_id") === mapping("old_id"), "left")
+        .groupBy(coalesce(col("new_id"), col("pub_id")).as("pub_id"))
+        .agg(count(col("author_id")).as("n_authors"), count(col("funder_id")).as("n_funders"),
+          pipedSet(col("author_id")).as("author_ids"), pipedSet(col("funder_id")).as("funder_ids"))
+        // n_authors > 0 = remove_orphan_publications: pubs without any
         // author association are dropped
-        .join(pipedAgg(authors, "author_id", "author_ids"), Seq("pub_id"))
-        .join(pipedAgg(funders, "funder_id", "funder_ids"), Seq("pub_id"), "left")
-        .join(merged.withColumnRenamed("new_id", "pub_id"), Seq("pub_id"), "left")
+        .filter(col("n_authors") > 0)
+        .select(col("pub_id"), col("author_ids"),
+          when(col("n_funders") > 0, col("funder_ids")).as("funder_ids"))
+
+      // one left join to the map drops the merged-away pubs and brings
+      // each survivor's group size
+      pubs.join(mapping, pubs("pub_id") === mapping("old_id"), "left")
+        .filter(col("new_id").isNull || col("new_id") === col("pub_id"))
+        .join(assoc, Seq("pub_id"))
         .select(
           col("pub_id"), col("doi"),
           coalesce(col("n_merged"), lit(1L)).as("n_merged"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Normalizers, TypeNormalize}
@@ -303,45 +304,36 @@ object DomainQueries {
         ),
         key = "o_orderkey"
       )
-      // Checkpointed: pubs feeds TWO consumers with DIFFERENT
-      // projections (the pub×author join reads only pub_id; pubFull
-      // reads pub_id+pub_year), so ReuseExchange cannot dedupe them —
-      // unpersisted, the whole harvestMerge outer-join fold ran twice
-      // (the pas reuse below, by contrast, has identical subplans and
-      // does get exchange reuse).
+      // pubs has one consumer, the pa join, so the merge aggregate runs
+      // once with no checkpoint (q_pipeline_full at sf0.1, graft.Bench,
+      // 3 JVMs a side, 2026-10-19: 1.43-1.82 s without a localCheckpoint
+      // of pubs, 1.66-2.16 s with one)
       val pubs = merged.select(
         col("o_orderkey").as("pub_id"),
         Distill.firstValid(
           Distill.validYear(year(col("sulpub_json.o_orderdate")), 2026),
           lit(1990L)
         ).as("pub_year")
-      ).localCheckpoint(true)
+      )
       val authors = t.customer
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("school"), (col("c_acctbal") > 5000).as("academic"))
-      val pa = o.select(col("o_orderkey").as("pub_id"), col("o_custkey"))
-        .join(pubs.select("pub_id"), "pub_id")
+      // One (pub_id, school) pass: pa is hash-partitioned by pub_id
+      // once, which serves the per-(pub_id, school) aggregate and the
+      // per-pub academic flag (a max window over pub_id) alike, so no
+      // second aggregate re-runs the scan and joins.
+      val pas = o.select(col("o_orderkey").as("pub_id"), col("o_custkey"))
+        .join(pubs, "pub_id")
         .join(broadcast(authors), col("o_custkey") === col("c_custkey"))
-      // One (pub_id, school) pre-aggregation feeds BOTH consumers
-      // below: the per-pub academic flag folds over it and the
-      // school report joins it directly — the identical exchange
-      // subplan is computed once (ReuseExchange), where aggregating
-      // pa twice re-ran the scan+joins.
-      val pas = pa.groupBy("pub_id", "school").agg(bool_or(col("academic")).as("school_academic"))
-      val academic = pas.groupBy("pub_id").agg(bool_or(col("school_academic")).as("academic_authored"))
-      val federal = t.lineitem.select(col("l_orderkey").as("pub_id"), col("l_partkey")).distinct()
+        .repartition(col("pub_id"))
+        .groupBy("pub_id", "pub_year", "school")
+        .agg(bool_or(col("academic")).as("school_academic"))
+        .withColumn("academic_authored", max(col("school_academic")).over(Window.partitionBy("pub_id")))
+      // no distinct() of the (pub, part) links: bool_or ignores repeats
+      val federal = t.lineitem.select(col("l_orderkey").as("pub_id"), col("l_partkey"))
         .join(broadcast(t.part), col("p_partkey") === col("l_partkey"))
         .groupBy("pub_id").agg(bool_or(col("p_size") > 25).as("federally_funded"))
-      val pubFull = pubs
-        .join(academic, Seq("pub_id"), "left")
-        .join(federal, Seq("pub_id"), "left")
-        .select(
-          col("pub_id"), col("pub_year"),
-          coalesce(col("academic_authored"), lit(false)).as("academic_authored"),
-          coalesce(col("federally_funded"), lit(false)).as("federally_funded")
-        )
-      pas.select("pub_id", "school")
-        .join(pubFull, "pub_id")
+      pas.join(federal, Seq("pub_id"), "left")
         .groupBy("school")
         .agg(
           count(lit(1)).as("n_pubs"),

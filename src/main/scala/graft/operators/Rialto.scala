@@ -16,13 +16,21 @@ import graft.functions.Normalizers
   */
 object Rialto {
 
-  /** merge_pubs survivor pick (deduplicate.py:187-217): one row per key,
-    * newest first by `newestBy` (descending, with the caller providing
-    * enough columns for determinism).
+  /** merge_pubs as one old→new id map (deduplicate.py:187-217): for
+    * every row of `df`, `old_id` is its `idCol`, `new_id` the `idCol`
+    * of its key group's survivor (the newest by `newestBy`, descending;
+    * the caller provides enough columns for determinism) and `n_merged`
+    * the group's size. One window pass: the survivor is the first row
+    * of the ordered group, so no survivor frame is joined back.
     */
-  def keepNewest(df: DataFrame, keys: Seq[String], newestBy: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(newestBy.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  def mergeMap(df: DataFrame, idCol: String, keys: Seq[String], newestBy: Seq[Column])
+      : DataFrame = {
+    val group = Window.partitionBy(keys.map(col): _*).orderBy(newestBy.map(_.desc): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    df.select(
+      col(idCol).as("old_id"),
+      first(col(idCol)).over(group).as("new_id"),
+      count(lit(1)).over(group).as("n_merged"))
   }
 
   /** Duplicate-group merge: groupBy the dup key, keep the max "payload"
@@ -39,15 +47,43 @@ object Rialto {
 
   /** Harvest fill-in merge (harvest_incremental modules): per-source
     * publication batches keyed by normalized DOI fold into one row with
-    * a struct column per source (≈ the dim_json/openalex_json/... JSONB
-    * columns). Chained full-outer joins on the key; each source's
-    * non-key columns nest under `<name>_json`.
+    * a struct column per source (≈ the dim_json/openalex_json/...
+    * JSONB columns); each source's non-key columns nest under
+    * `<name>_json`, NULL where the source lacks the key.
+    *
+    * One union and one aggregate: each source's rows carry their own
+    * struct and NULL for the others, and a group by the key takes each
+    * source's one struct. A key held by more than one row of one source
+    * fails the query with a named error, raised by a filter on that
+    * aggregate's per-source counts (a filter, so the check runs even for
+    * a consumer that reads no payload). Rows with a NULL key match
+    * nothing and stay one output row each.
     */
-  def harvestMerge(sources: Seq[(String, DataFrame)], key: String): DataFrame =
-    sources.map { case (name, df) =>
+  def harvestMerge(sources: Seq[(String, DataFrame)], key: String): DataFrame = {
+    val nested = sources.map { case (name, df) =>
       val payload = df.columns.filterNot(_ == key)
       df.select(col(key), struct(payload.map(col): _*).as(s"${name}_json"))
-    }.reduce((a, b) => a.join(b, Seq(key), "full_outer"))
+    }
+    val outs = nested.map(_.schema(1))
+    val tagged = nested.zipWithIndex.map { case (df, i) =>
+      df.select(col(key) +: outs.zipWithIndex.map { case (f, j) =>
+        if (j == i) col(f.name) else lit(null).cast(f.dataType).as(f.name)
+      }: _*)
+    }.reduce(_ union _)
+    val aggs = outs.flatMap(f => Seq(
+      first(col(f.name), ignoreNulls = true).as(f.name), count(col(f.name)).as(s"__n_${f.name}")))
+    val unique = sources.zip(outs).foldLeft(lit(true)) { case (ok, ((name, _), f)) =>
+      val n = col(s"__n_${f.name}")
+      when(n > 1, raise_error(concat(lit(s"harvestMerge: source '$name' holds key "),
+        col(key).cast("string"), lit(" in "), n.cast("string"), lit(" rows")))).otherwise(ok)
+    }
+    tagged
+      .withColumn("__row", when(col(key).isNull, monotonically_increasing_id()))
+      .groupBy(col(key), col("__row"))
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(unique)
+      .select(col(key) +: outs.map(f => col(f.name)): _*)
+  }
 
   /** authors.upsert_author as a batch merge: incoming wins over existing
     * on the natural key; rows only in one side pass through. `action` is

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 
 /** Plan-shape regression guards: the properties `tools.Explain` was
   * used to audit by hand, asserted automatically so a refactor can't
@@ -8,7 +11,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * explain string because AQE's AdaptiveSparkPlanExec hides its inner
   * plan from tree collection.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def formatted(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
@@ -144,14 +147,30 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("q_pipeline_full computes the pub-author-school subplan once (exchange reuse)") {
+  test("q_pipeline_full computes the pub-author-school subplan once") {
     val df = SparkEntry.queries("q_pipeline_full")(spark, sfDir)
     // collect() executes THIS QueryExecution, so the adaptive plan
     // below is the final one (a write would plan a fresh execution)
     df.collect()
-    val s = df.queryExecution.executedPlan.toString
-    assert(s.contains("ReusedExchange") || s.contains("ReusedQueryStage"),
-      "expected the (pub_id, school) pre-agg exchange to be reused:\n" + s.take(6000))
+    val plan = df.queryExecution.executedPlan
+    def school(p: SparkPlan) = p.output.exists(_.name == "school")
+    def byPub(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "pub_id"))
+      case _ => false
+    }
+    // a reused exchange still feeds a second consumer, so it counts too
+    val paShuffles = collect(plan) {
+      case e: ShuffleExchangeExec if school(e) && byPub(e) => e
+      case r @ ReusedExchangeExec(_, e: ShuffleExchangeExec) if school(r) && byPub(e) => r
+    }
+    val authorBroadcasts = collect(plan) {
+      case b: BroadcastExchangeExec if school(b) => b
+      case r @ ReusedExchangeExec(_, _: BroadcastExchangeExec) if school(r) => r
+    }
+    assert(paShuffles.size == 1,
+      "expected one (pub_id, school) aggregation exchange:\n" + plan.toString.take(8000))
+    assert(authorBroadcasts.size == 1,
+      "expected one customer-nation broadcast:\n" + plan.toString.take(8000))
   }
 
   test("report association branches run distinct+agg on ONE shuffle each (3 total)") {

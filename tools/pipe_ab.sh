@@ -19,6 +19,11 @@
 #   ok          otherwise.
 # Per-layer metrics have no bound and get "-".
 #
+# With trace=1 it then prints the per-query `jobs` diff: each query's
+# median `jobs` over the traced passes each side ran here, read from that
+# side's pipebench/results/<workload>-seed<i>-trace1-layers.jsonl (files
+# older than this A/B are skipped), one row per query whose count changed.
+#
 #   tools/pipe_ab.sh <parent_dir> <change_dir> <workload> [pairs] [seconds] [trace] [outdir]
 #
 # Both checkouts must hold pipebench/; metric directions come from the
@@ -33,6 +38,7 @@ TRACE="${6:-0}"
 OUT="${7:-pipe_ab_${WORKLOAD}_trace${TRACE}}"
 mkdir -p "$OUT"
 OUT="$(cd "$OUT" && pwd)"
+STARTED="$(date +%s)"
 
 run_side() { # side pair
   local dir; dir=$([ "$1" = parent ] && echo "$PARENT" || echo "$CHANGE")
@@ -47,10 +53,11 @@ for i in $(seq 1 "$PAIRS"); do
   else run_side change "$i"; run_side parent "$i"; fi
 done
 
-python3 - "$OUT" "$PAIRS" "$PARENT/BENCHMARK.json" <<'EOF'
+python3 - "$OUT" "$PAIRS" "$PARENT/BENCHMARK.json" "$PARENT" "$CHANGE" "$WORKLOAD" "$TRACE" "$STARTED" <<'EOF'
 import json, os, statistics, sys
 
 out, pairs, bench = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+parent_dir, change_dir, workload, trace, started = sys.argv[4:9]
 with open(bench) as f:
     spec = json.load(f)
 better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
@@ -106,4 +113,29 @@ for name in full[0][0]["metrics"]:
     print(f"{name + ' (' + unit + ')':24} {p1:8.3f} / {pm:8.3f} / {p3:8.3f} "
           f"{c1:8.3f} / {cm:8.3f} / {c3:8.3f} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no ':4}"
           f"{verdict(name, pv, cv, pm, p3 - p1, cm, sign)}")
+
+if trace != "1":
+    sys.exit(0)
+
+def query_jobs(root):
+    jobs = {}
+    for i in range(1, pairs + 1):
+        path = os.path.join(root, "pipebench", "results", f"{workload}-seed{i}-trace1-layers.jsonl")
+        if not os.path.exists(path) or os.path.getmtime(path) < float(started):
+            continue
+        with open(path) as f:
+            for line in f:
+                r = json.loads(line)
+                jobs.setdefault(r["query"], []).append(r["jobs"])
+    return {q: statistics.median(v) for q, v in jobs.items()}
+
+pj, cj = query_jobs(parent_dir), query_jobs(change_dir)
+changed = [q for q in sorted(set(pj) | set(cj)) if pj.get(q) != cj.get(q)]
+print(f"\nper-query jobs (median over traced passes), {len(changed)} of {len(set(pj) | set(cj))} queries changed")
+print(f"{'query':28} {'parent':>8} {'change':>8} {'delta':>8}")
+fmt = lambda v: "-" if v is None else f"{v:g}"
+for q in changed:
+    p, c = pj.get(q), cj.get(q)
+    d = fmt(c - p) if p is not None and c is not None else "-"
+    print(f"{q:28} {fmt(p):>8} {fmt(c):>8} {d:>8}")
 EOF
