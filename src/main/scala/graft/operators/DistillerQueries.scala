@@ -158,7 +158,7 @@ object DistillerQueries {
           array(struct(struct(lit("journal").as("type"), dn.as("display_name")).as("source")))
         ).as("oa_locations"),
         when(k % 8 === 0, concat(lit("OA-H-"), ks)).when(k % 8 === 4, lit("")).as("oa_host"))
-      Distillers.joinIssnSource(pubs, "o_orderkey", "journal_issn", lookup)
+      Distillers.joinIssnSource(pubs, "journal_issn", lookup)
         .select(
           k,
           Distillers.journalName(col("oa_locations"), col("lookup_display_name")).as("journal_name"),
@@ -192,7 +192,7 @@ object DistillerQueries {
         when(k % 11 === 0, lit(750L)).as("oa_list"),
         element_at(oaStatuses, (k % 5 + 1).cast("int")).as("oa_status"),
         (k % 13 === 0).as("is_preprint"))
-      Rialto.apcDatasetLookup(pubs, "o_orderkey", "dim_issns", "pub_year", lookup)
+      Rialto.apcDatasetLookup(pubs, "dim_issns", "pub_year", lookup)
         .select(
           k,
           Rialto.apc(

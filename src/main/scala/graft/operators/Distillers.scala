@@ -285,18 +285,29 @@ object Distillers {
     * piped ISSN string against a (small, broadcast) issn → source
     * lookup, keeping the match for the EARLIEST ISSN in the pub's own
     * list — adds `lookup_display_name` / `lookup_host_org` columns.
-    * The pubs side shuffles nothing: explode + broadcast-join + one
-    * keyed re-aggregation on the pub id.
+    * Each pub row is read once: tagged with a per-row id and carried
+    * whole as a struct, it is exploded to (pos, issn) pairs
+    * (posexplode_outer, so a NULL list keeps one row), left-joined to
+    * the broadcast lookup and folded back by one aggregate on the row
+    * id. That aggregate's exchange is the plan's only shuffle. Every
+    * input row comes out once, each with its own list's match, also
+    * when two rows share a pub id or have none.
     */
-  def joinIssnSource(pubs: DataFrame, idCol: String, issnsCol: String, lookup: DataFrame): DataFrame = {
-    val hits = pubs
-      .select(col(idCol), posexplode(split(col(issnsCol), "\\|")).as(Seq("pos", "issn")))
-      .join(broadcast(lookup), Seq("issn"))
-      .groupBy(idCol)
-      .agg(min_by(struct(col("display_name"), col("host_organization_name")), col("pos")).as("__src"))
-    pubs.join(hits, Seq(idCol), "left")
-      .withColumn("lookup_display_name", col("__src.display_name"))
-      .withColumn("lookup_host_org", col("__src.host_organization_name"))
-      .drop("__src")
+  def joinIssnSource(pubs: DataFrame, issnsCol: String, lookup: DataFrame): DataFrame = {
+    val src = lookup.select(col("issn").as("__hit"),
+      struct(col("display_name"), col("host_organization_name")).as("__src"))
+    // the id is taken before the explode: a generator in the same
+    // select would put the projection, and so a fresh id, above it
+    pubs
+      .select(monotonically_increasing_id().as("__row"), struct(pubs.columns.map(col): _*).as("__pub"),
+        split(col(issnsCol), "\\|").as("__issns"))
+      .select(col("__row"), col("__pub"), posexplode_outer(col("__issns")).as(Seq("__pos", "__issn")))
+      .join(broadcast(src), col("__issn") === col("__hit"), "left")
+      .groupBy("__row")
+      .agg(first(col("__pub")).as("__pub"),
+        min_by(col("__src"), when(col("__hit").isNotNull, col("__pos"))).as("__src"))
+      .select(col("__pub.*"),
+        col("__src.display_name").as("lookup_display_name"),
+        col("__src.host_organization_name").as("lookup_host_org"))
   }
 }

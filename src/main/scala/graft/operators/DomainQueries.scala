@@ -24,19 +24,16 @@ object DomainQueries {
       year(col("o_orderdate")).cast("long").as("pub_year"),
       col("o_orderpriority").as("title")
     )
-  /** Both association tables shuffle by pub_id ONCE each: hash(pub_id)
-    * satisfies every downstream clustering — the pair distinct
-    * (pub_id ⊆ the distinct key) and the per-pub report aggregations —
-    * so each branch's whole distinct→aggregate chain runs on its one
-    * REPARTITION_BY_COL exchange with no further shuffles. Before
-    * this, each branch shuffled twice (all-column distinct, then a
-    * re-shuffle for the pub_id agg): 5 exchanges per report, now 3
-    * (measured at sf1: by_author 3.41→2.33 s, by_dept 3.67→1.80 s,
-    * by_group 2.89→1.55 s). Catalyst prunes each branch's unused
-    * column below its exchange, so the branches scan lineitem
-    * separately — intentional: two 2-column pruned scans shuffle the
-    * same total bytes as one shared 3-column exchange would, without
-    * pinning a fact-table-sized cache (the right 100 TB trade).
+  /** The association, shuffled by pub_id ONCE: hash(pub_id) satisfies
+    * every downstream clustering — the pair distincts (pub_id ⊆ the
+    * distinct key) and the per-pub report aggregations — so each
+    * consumer's whole distinct→aggregate chain runs on its one
+    * REPARTITION_BY_COL exchange with no further shuffles (measured at
+    * sf1 against an all-column distinct and a re-shuffle for the pub_id
+    * agg: by_author 3.41→2.33 s, by_dept 3.67→1.80 s, by_group
+    * 2.89→1.55 s). The by-author and by-dim reports read author and
+    * funder from each row of this one exchange; the pair frames below
+    * prune it to two columns, each a scan of its own.
     */
   private def assoc(t: Tables): DataFrame =
     t.lineitem
@@ -45,13 +42,20 @@ object DomainQueries {
       .repartition(col("pub_id"))
   private def pubAuthor(t: Tables): DataFrame =
     assoc(t).select("pub_id", "author_id").distinct()
-  private def authors(t: Tables): DataFrame =
-    t.supplier
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
-      .select(
-        col("s_suppkey").as("author_id"), col("s_name").as("author_name"),
-        col("n_name").as("school"), col("r_name").as("dept"))
+  /** The author dim with only the tables a report reads: an inner join
+    * to nation or region can drop authors, so Catalyst keeps it even
+    * when none of its columns is read. by_author reads names only,
+    * by_group the school, by_dept school and dept, as their oracles do.
+    */
+  private def authorNames(t: Tables): DataFrame =
+    t.supplier.select(col("s_suppkey").as("author_id"), col("s_name").as("author_name"))
+  private def authorSchools(t: Tables, withDept: Boolean): DataFrame = {
+    val dims = Seq(col("s_suppkey").as("author_id"), col("n_name").as("school"))
+    val bySchool = t.supplier.join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
+    if (!withDept) bySchool.select(dims: _*)
+    else bySchool.join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+      .select(dims :+ col("r_name").as("dept"): _*)
+  }
   private def pubFunder(t: Tables): DataFrame =
     assoc(t).select("pub_id", "funder_id").distinct()
   private def funders(t: Tables): DataFrame =
@@ -177,9 +181,13 @@ object DomainQueries {
     },
 
     // #23 funder link: explode-equivalent association dedupe + link-back.
+    // The links shuffle once, by funder_id: that partitioning serves the
+    // (pub_id, funder_id) distinct and the per-funder count alike.
     "q_funder_link" -> { (s, dir) =>
       val t = Tables(s, dir)
-      pubFunder(t)
+      t.lineitem.select(col("l_orderkey").as("pub_id"), col("l_partkey").as("funder_id"))
+        .repartition(col("funder_id"))
+        .distinct()
         .groupBy("funder_id")
         .agg(count(lit(1)).as("n_pubs"))
         .join(broadcast(funders(t)), "funder_id")
@@ -380,14 +388,15 @@ object DomainQueries {
     // #25 publications_by_<dim> report (school ≈ supplier nation).
     "q_report_by_group" -> { (s, dir) =>
       val t = Tables(s, dir)
-      Reports.publicationsByGroup(pubs(t), pubAuthor(t), authors(t), pubFunder(t), funders(t), Seq("school"))
+      Reports.publicationsByGroup(pubs(t), assoc(t), authorSchools(t, withDept = false), funders(t), Seq("school"))
     },
 
     // #25b publications_by_department report (two author-dim keys,
     // mirroring the reference's 4-table publish set).
     "q_report_by_dept" -> { (s, dir) =>
       val t = Tables(s, dir)
-      Reports.publicationsByGroup(pubs(t), pubAuthor(t), authors(t), pubFunder(t), funders(t), Seq("school", "dept"))
+      Reports.publicationsByGroup(pubs(t), assoc(t), authorSchools(t, withDept = true), funders(t),
+        Seq("school", "dept"))
     },
 
     // publish/orcid.py integration stats: counts by update scope.
@@ -449,7 +458,7 @@ object DomainQueries {
     // #26 publications_by_author report with author-list distills.
     "q_report_by_author" -> { (s, dir) =>
       val t = Tables(s, dir)
-      Reports.publicationsByAuthor(pubs(t), pubAuthor(t), authors(t), pubFunder(t), funders(t))
+      Reports.publicationsByAuthor(pubs(t), assoc(t), authorNames(t), funders(t))
     }
   )
 

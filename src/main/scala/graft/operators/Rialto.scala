@@ -162,26 +162,33 @@ object Rialto {
     * cost > 0 hits.
     *
     * Engine shape: the dataset (~20k rows in the reference) flattens
-    * to (issn, year, cost), broadcasts, and equi-joins the exploded
-    * (pub, pos, issn) pairs — the pub side shuffles only (id, pos,
-    * issn) tuples, then one keyed min_by(pos) re-aggregation. Adds an
-    * `apc_dataset` column; `lookup` needs columns issn_1, issn_2,
-    * apc_year, apc_usd.
+    * in one explode to (issn, year, cost) and broadcasts. Each pub row
+    * is read once: tagged with a per-row id and carried whole as a
+    * struct, it is exploded to (pos, issn) pairs (posexplode_outer, so
+    * a NULL or empty list keeps one row), left-joined to the dataset
+    * and folded back by one aggregate on the row id, where min_by(pos)
+    * over the matched pairs picks the cost. Every input row comes out
+    * once, each with its own list's result, also when two rows share a
+    * pub id or have none. Adds an `apc_dataset` column; `lookup` needs
+    * columns issn_1, issn_2, apc_year, apc_usd.
     */
-  def apcDatasetLookup(pubs: DataFrame, idCol: String, issnsCol: String,
-      yearCol: String, lookup: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
+  def apcDatasetLookup(pubs: DataFrame, issnsCol: String, yearCol: String,
+      lookup: DataFrame): DataFrame = {
     val flat = lookup
-      .select(col("issn_1").as("__issn"), col("apc_year"), col("apc_usd"))
-      .unionByName(lookup.select(col("issn_2").as("__issn"), col("apc_year"), col("apc_usd")))
-      .filter(col("apc_usd").isNotNull && col("apc_usd") > 0)
+      .select(explode(array(col("issn_1"), col("issn_2"))).as("__hit"),
+        col("apc_year").as("__hit_year"), col("apc_usd").as("__usd"))
+      .filter(col("__usd").isNotNull && col("__usd") > 0)
+    // the id is taken before the explode: a generator in the same
+    // select would put the projection, and so a fresh id, above it
     val hits = pubs
-      .select(col(idCol), col(yearCol).as("__y"),
-        posexplode(col(issnsCol)).as(Seq("__pos", "__issn")))
-      .join(broadcast(flat), Seq("__issn"))
-      .filter(col("__y") === col("apc_year"))
-      .groupBy(idCol)
-      .agg(min_by(col("apc_usd"), col("__pos")).as("apc_dataset"))
-    pubs.join(hits, Seq(idCol), "left")
+      .select(monotonically_increasing_id().as("__row"), struct(pubs.columns.map(col): _*).as("__pub"),
+        col(yearCol).as("__y"), col(issnsCol).as("__issns"))
+      .select(col("__row"), col("__pub"), col("__y"),
+        posexplode_outer(col("__issns")).as(Seq("__pos", "__issn")))
+      .join(broadcast(flat), col("__issn") === col("__hit") && col("__y") === col("__hit_year"), "left")
+    hits.groupBy("__row")
+      .agg(first(col("__pub")).as("__pub"),
+        min_by(col("__usd"), when(col("__hit").isNotNull, col("__pos"))).as("apc_dataset"))
+      .select(col("__pub.*"), col("apc_dataset"))
   }
 }

@@ -301,6 +301,12 @@ object TextDedup {
     * (TUNING.md round 9 — q_lsh_eval 10.2 s default vs 4.1 s suppressed
     * at sf3); at corpus scale broadcasting shingles is never viable, so
     * the hint is also the plan that survives 100 TB.
+    *
+    * Each pair's Jaccard is evaluated once: one projection computes it
+    * (its union once, by subexpression elimination) and a one-element
+    * explode passes it on. The threshold filters that generator's
+    * output, which Catalyst does not push below the generator, so no
+    * copy of the Jaccard lands in the join condition.
     */
   private def verifiedPairs(candidates: DataFrame, shingled: DataFrame,
                             family: HashFamily, minJaccard: Double): DataFrame = {
@@ -311,7 +317,8 @@ object TextDedup {
       .hint("shuffle_hash")
       .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        (if (family == XxHash) exact else round(exact, 4)).as("jaccard"))
+        (if (family == XxHash) exact else round(exact, 4)).as("__jaccard"))
+      .select(col("id_a"), col("id_b"), explode(array(col("__jaccard"))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 

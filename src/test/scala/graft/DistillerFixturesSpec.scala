@@ -355,7 +355,7 @@ class DistillerFixturesSpec extends SparkSpec {
 
     // apc_paid -> dataset -> apc_list (apc.py rule order), then the
     // closed/diamond/gold/hybrid resolution in Rialto.apc.
-    val looked = Rialto.apcDatasetLookup(base, "id", "dim_issns", "pub_year", apcLookup)
+    val looked = Rialto.apcDatasetLookup(base, "dim_issns", "pub_year", apcLookup)
     val out = looked.select(col("id"),
         Rialto.apc(
           Distill.firstValid(
@@ -773,7 +773,7 @@ class DistillerFixturesSpec extends SparkSpec {
         Distillers.journalIssn(
           Distillers.one(jstr(col("dim"), "issn")),
           Distillers.one(jstr(col("pm"), "MedlineCitation.Article.Journal.ISSN.#text"))).as("issns"))
-    val out = Distillers.joinIssnSource(pubs, "id", "issns", lookup)
+    val out = Distillers.joinIssnSource(pubs, "issns", lookup)
       .select(col("id"), col("issns"),
         Distillers.journalName(lit(null).cast("array<struct<source: struct<type: string, display_name: string>>>"),
           col("lookup_display_name")).as("j"),

@@ -149,10 +149,43 @@ class DistillersSpec extends SparkSpec {
       (1L, "1111-1111|3333-3333|2222-2222"), // first hit is 3333 (pos 1)
       (2L, "0000-0000")                      // no hit
     ).toDF("id", "issns")
-    val out = Distillers.joinIssnSource(pubs, "id", "issns", lookup)
+    val out = Distillers.joinIssnSource(pubs, "issns", lookup)
       .orderBy("id").collect()
     assert(out(0).getString(2) == "Journal C" && out(0).getString(3) == "Org C")
     assert(out(1).isNullAt(2))
+  }
+
+  test("joinIssnSource contract: every pub row comes out once with its own list's earliest match") {
+    val lookup = Seq(
+      ("2222-2222", "Journal B", "Org B"),
+      ("3333-3333", null, null)               // a match with a NULL payload
+    ).toDF("issn", "display_name", "host_organization_name")
+    val pubs = Seq(
+      (Option(1L), null),                     // NULL list
+      (Option(2L), ""),                       // empty list
+      (Option(3L), "0000-0000"),              // no match
+      (Option(4L), "0000-0000|1111-1111|2222-2222"), // match only at a later position
+      (Option(5L), "3333-3333|2222-2222"),    // the earliest match wins, NULL payload and all
+      (Option(6L), "2222-2222"),              // two pubs share an id ...
+      (Option(6L), "0000-0000"),              // ... each gets its own list's match
+      (None, "2222-2222")                     // NULL id
+    ).toDF("id", "issns")
+    val out = Distillers.joinIssnSource(pubs, "issns", lookup)
+    assert(out.columns.toSeq == Seq("id", "issns", "lookup_display_name", "lookup_host_org"))
+    val got = out.collect().map(r => (Option(r.get(0)), Option(r.getString(1)),
+      Option(r.getString(2)), Option(r.getString(3)))).toSeq
+    val b = (Some("Journal B"), Some("Org B"))
+    val want = Seq[(Option[Any], Option[String], (Option[String], Option[String]))](
+      (Some(1L), None, (None, None)),
+      (Some(2L), Some(""), (None, None)),
+      (Some(3L), Some("0000-0000"), (None, None)),
+      (Some(4L), Some("0000-0000|1111-1111|2222-2222"), b),
+      (Some(5L), Some("3333-3333|2222-2222"), (None, None)),
+      (Some(6L), Some("2222-2222"), b),
+      (Some(6L), Some("0000-0000"), (None, None)),
+      (None, Some("2222-2222"), b)
+    ).map { case (id, l, (d, h)) => (id, l, d, h) }
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString))
   }
 
   test("title + pubYear chains follow reference precedence") {

@@ -174,11 +174,12 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("report association branches run distinct+agg on ONE shuffle each (3 total)") {
-    // Each association branch repartitions by pub_id once; hash(pub_id)
-    // satisfies the pair distinct and the per-pub agg, so no branch
-    // adds a second exchange. 3 shuffles total: author branch, funder
-    // branch, orders side of the final join. Regression here = the old
-    // 5-exchange shape (all-column distinct, then re-shuffle per agg).
+    // The association repartitions by pub_id once; hash(pub_id)
+    // satisfies the per-pub (or per-(pub, dims)) aggregate and the flag
+    // window, so nothing adds a second exchange over it. At most 3
+    // shuffles: the association, the orders side of the final join, and
+    // one spare. Regression here = the old 5-exchange shape
+    // (all-column distinct, then re-shuffle per agg).
     for (name <- Seq("q_report_by_author", "q_report_by_dept")) {
       val s = formatted(name)
       assert(countOp(s, "Exchange") <= 3, s"$name extra shuffles:\n" + s.take(6000))

@@ -42,6 +42,39 @@ class RialtoSpec extends SparkSpec {
     ))
   }
 
+  test("apcDatasetLookup contract: every pub row comes out once with its own list's first positive cost") {
+    val lookup = Seq(
+      ("1111-1111", "1111-2222", 2020L, Option(500L)),
+      ("3333-3333", null, 2020L, None),        // a match with a NULL cost is no hit
+      ("4444-4444", null, 2020L, Option(0L)),  // nor is a zero cost
+      ("5555-5555", "5555-6666", 2021L, Option(700L))
+    ).toDF("issn_1", "issn_2", "apc_year", "apc_usd")
+    val pubs = Seq(
+      (Option(1L), 2020L, null),                                         // NULL list
+      (Option(2L), 2020L, Seq.empty[String]),                            // empty list
+      (Option(3L), 2020L, Seq("0000-0000")),                             // no match
+      (Option(4L), 2020L, Seq("0000-0000", "3333-3333", "4444-4444", "1111-2222")), // later position
+      (Option(5L), 2020L, Seq("5555-5555")),                             // other year only
+      (Option(6L), 2020L, Seq("1111-1111")),                             // two pubs share an id ...
+      (Option(6L), 2021L, Seq("5555-6666")),                             // ... each gets its own
+      (None, 2021L, Seq("5555-5555"))                                    // NULL id
+    ).toDF("id", "pub_year", "issns")
+    val out = Rialto.apcDatasetLookup(pubs, "issns", "pub_year", lookup)
+    assert(out.columns.toSeq == Seq("id", "pub_year", "issns", "apc_dataset"))
+    val got = out.collect().map(r => (Option(r.get(0)), r.getLong(1),
+      Option(r.getSeq[String](2)).map(_.toList), Option(r.get(3)))).toSeq
+    val want = Seq(
+      (Some(1L), 2020L, None, None),
+      (Some(2L), 2020L, Some(Nil), None),
+      (Some(3L), 2020L, Some(List("0000-0000")), None),
+      (Some(4L), 2020L, Some(List("0000-0000", "3333-3333", "4444-4444", "1111-2222")), Some(500L)),
+      (Some(5L), 2020L, Some(List("5555-5555")), None),
+      (Some(6L), 2020L, Some(List("1111-1111")), Some(500L)),
+      (Some(6L), 2021L, Some(List("5555-6666")), Some(700L)),
+      (None, 2021L, Some(List("5555-5555")), Some(700L)))
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString))
+  }
+
   test("harvestMerge keeps every key and nests payloads per source") {
     val s1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "price")
     val s2 = Seq((2L, "x"), (3L, "y")).toDF("k", "tag")
@@ -123,19 +156,36 @@ class RialtoSpec extends SparkSpec {
 
   test("job counts of the rialto pipeline queries on the fixture") {
     // Every job, build and execution, of one warm run (the first run
-    // memoizes the table schemas). At sf 0.001 a job costs a roughly
-    // fixed 35-60 ms whatever it computes, so each job is pass time.
-    // A change may lower a count; raising one needs a reason written
-    // here.
+    // memoizes the table schemas) of each of pipebench's 25
+    // rialto_small queries. At sf 0.001 a job costs a roughly fixed
+    // 35-60 ms whatever it computes, so each job is pass time. A change
+    // may lower a count; raising one needs a reason written here.
     val pins = Seq(
-      "q_dedupe_null_doi" -> 7,
-      "q_pipeline_full" -> 10,
       "q_harvest_merge" -> 2,
-      "q_report_by_author" -> 8,
-      "q_report_by_dept" -> 9,
-      "q_report_by_group" -> 9,
+      "q_upsert_merge" -> 3,
+      "q_dedupe_null_doi" -> 7,
+      "q_dedupe_merge_assoc" -> 2,
+      "q_dedupe_keep_newest" -> 2,
+      "q_orphan_removal" -> 2,
+      "q_normalize_ids" -> 1,
+      "q_type_normalize" -> 1,
+      "q_distill_fields" -> 2,
+      "q_distill_abstract" -> 1,
+      "q_distill_author_names" -> 2,
+      "q_distill_author_orcids" -> 2,
+      "q_citation_distill" -> 1,
+      "q_apc_lookup" -> 4,
+      "q_journal_lookup" -> 3,
+      "q_issn_clean" -> 1,
+      "q_funder_link" -> 3,
+      "q_federal_match" -> 2,
+      "q_distill_authored" -> 4,
+      "q_pipeline_full" -> 10,
       "q_report_publications" -> 4,
-      "q_apc_lookup" -> 6)
+      "q_report_by_author" -> 5,
+      "q_report_by_dept" -> 7,
+      "q_report_by_group" -> 6,
+      "q_orcid_stats" -> 2)
     val got = pins.map { case (q, _) =>
       SparkEntry.queries(q)(spark, sfDir).collect()
       q -> jobsDuring(SparkEntry.queries(q)(spark, sfDir).collect())._2

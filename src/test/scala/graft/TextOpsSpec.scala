@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression, LambdaFunction}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.functions._
 
@@ -188,6 +188,18 @@ class TextOpsSpec extends SparkSpec {
         }
       }).flatten
       assert(inLambda.isEmpty, s"signature inside a lambda: ${inLambda.mkString(", ")}")
+    }
+  }
+
+  test("minhash near-dups: the verify join evaluates each pair's Jaccard in one projection only") {
+    // The threshold filter must not be pushed into the join condition,
+    // where it would compute the Jaccard a second time for every pair.
+    for (df <- Seq(TextDedup.minhashNearDups(nearDupDocs, "doc_id", "text", minJaccard = 0.5),
+        TextDedup.minhashNearDupsPortable(nearDupDocs, "doc_id", "text", minJaccard = 0.5))) {
+      val intersects = df.queryExecution.optimizedPlan.collect {
+        case p => p.expressions.flatMap(_.collect { case i: ArrayIntersect => i })
+      }.filter(_.nonEmpty)
+      assert(intersects.map(_.size) == Seq(1), df.queryExecution.optimizedPlan.toString)
     }
   }
 
