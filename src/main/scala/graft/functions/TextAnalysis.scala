@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for a large-scale training-data pipeline:
-  * tokenization, token counting, quality scoring (Gopher-style rules),
-  * language-ID heuristics, n-gram shingling, Jaccard similarity, and
-  * document fingerprinting.
+  * tokenization, token counting, stopword hits, language-ID heuristics,
+  * n-gram shingling, Jaccard similarity, and document fingerprinting.
   *
   * All pure Column expressions — per-row, embarrassingly parallel, inside
   * whole-stage codegen. Nothing here shuffles; shuffling belongs to the
@@ -20,34 +19,17 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokenize(text)).cast("long")
 
-  /** BPE-ish token estimate: ceil(len/4) subword chunks per word —
-    * the ~4-chars-per-token heuristic used for budget estimates.
+  /** BPE-ish token estimate of a token array (e.g. [[tokenize]]'s):
+    * ceil(len/4) subword chunks per word — the ~4-chars-per-token
+    * heuristic used for budget estimates. Taking the array lets a
+    * caller that also counts words split the text once.
     */
-  def bpeTokenEstimate(text: Column): Column =
-    aggregate(
-      tokenize(text),
-      lit(0L),
-      (acc, w) => acc + ceil(length(w) / 4.0).cast("long")
-    )
+  def bpeTokenEstimate(tokens: Column): Column =
+    aggregate(tokens, lit(0L), (acc, w) => acc + ceil(length(w) / 4.0).cast("long"))
 
   /** Number of tokens that appear in `stopwords`. */
   def stopwordHits(text: Column, stopwords: Seq[String]): Column =
     size(filter(tokenize(text), t => t.isInCollection(stopwords))).cast("long")
-
-  /** Mean token length. */
-  def meanTokenLen(text: Column): Column = {
-    val ws = tokenize(text)
-    (aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / size(ws))
-  }
-
-  /** Gopher-style quality gate: token count and mean word length within
-    * sane bounds, and at least one stopword hit.
-    */
-  def gopherQuality(text: Column, stopwords: Seq[String]): Column = {
-    val n = tokenCount(text)
-    val m = meanTokenLen(text)
-    n.between(10L, 100000L) && m.between(2.0, 12.0) && stopwordHits(text, stopwords) > 0
-  }
 
   /** Per-language stopword profiles for the language-ID heuristic. */
   val langProfiles: Map[String, Seq[String]] = Map(
@@ -121,24 +103,12 @@ object TextAnalysis {
   }
 
   /** Distinct word n-grams ("shingles"); empty array when too few
-    * words. Native expression (graft.plans.NgramShingles) — the HOF
-    * form below re-splits the text per output element (no CSE inside
-    * lambdas) and is O(words^2) per document.
+    * words. Native expression (graft.plans.NgramShingles); the specs'
+    * interpreted-HOF form (`HofOracles.wordNgramsHof`, src/test)
+    * re-splits the text per element and is O(words^2) per document.
     */
   def wordNgrams(text: Column, n: Int): Column =
     graft.plans.NgramShingles(text, n)
-
-  /** Reference HOF formulation of wordNgrams (same results on
-    * whitespace-normalized text).
-    */
-  def wordNgramsHof(text: Column, n: Int): Column = {
-    val ws = tokenize(text)
-    val grams = transform(
-      sequence(lit(1), size(ws) - (n - 1)),
-      i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k)): _*)
-    )
-    array_distinct(when(size(ws) >= n, grams).otherwise(array()))
-  }
 
   /** Jaccard similarity of two (distinct-element) arrays, 0 when both
     * are empty.
@@ -174,40 +144,18 @@ object TextAnalysis {
   /** Rebuild an abstract from a positional inverted index
     * (map word -> positions), the OpenAlex format — mirrors
     * /root/reference/rialto_airflow/distiller/abstract.py:66-94 as one
-    * expression: entries → (pos, word) pairs → sort → join.
+    * native expression: entries → (pos, word) pairs → sort → join.
+    * `HofOracles.rebuildInvertedIndexHof` (src/test) is the
+    * interpreted-HOF form the specs compare it against.
     */
   def rebuildInvertedIndex(m: Column): Column =
     graft.plans.InvertedIndexExprs.rebuild(m)
 
-  /** HOF formulation of rebuildInvertedIndex (same results). */
-  def rebuildInvertedIndexHof(m: Column): Column = {
-    val pairs = flatten(
-      transform(
-        map_entries(m),
-        e => transform(e.getField("value"), p => struct(p.as("pos"), e.getField("key").as("w")))
-      )
-    )
-    array_join(transform(array_sort(pairs), p => p.getField("w")), " ")
-  }
-
   /** Inverse of rebuildInvertedIndex for round-trip tests: text → map
-    * word -> sorted positions (0-based).
+    * word -> sorted positions (0-based). Its interpreted-HOF form,
+    * `HofOracles.buildInvertedIndexHof` (src/test), is O(words^2)
+    * because the token array re-materializes inside the lambdas.
     */
   def buildInvertedIndex(text: Column): Column =
     graft.plans.InvertedIndexExprs.build(text)
-
-  /** HOF formulation of buildInvertedIndex (same results, O(words^2)
-    * because the token array re-materializes inside the lambdas).
-    */
-  def buildInvertedIndexHof(text: Column): Column = {
-    val ws = tokenize(text)
-    val dw = array_distinct(ws)
-    map_from_arrays(
-      dw,
-      transform(
-        dw,
-        w => filter(transform(sequence(lit(1), size(ws)), i => i - 1), p => element_at(ws, p + 1) === w)
-      )
-    )
-  }
 }

@@ -46,6 +46,12 @@ object Bpe {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum(col("wc")).as("freq"))
 
+  /** Most merges one round folds over its frame: every MaxFoldDepth
+    * merges the symbolized vocab is checkpointed and the fold restarts
+    * there, so no plan nests more aggregate() lambdas than this.
+    */
+  private[graft] val MaxFoldDepth = 16
+
   /** Learn `nMerges` merges from a (word, count) table. Deterministic:
     * argmax pair with (freq desc, a asc, b asc) tiebreak. Stops early
     * if no pair remains. Returns merges in application order.
@@ -56,27 +62,38 @@ object Bpe {
         expr(s"transform(sequence(1, length($wordCol)), i -> substr($wordCol, i, 1))").as("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val merges = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    def fold(df: DataFrame, ms: Seq[(String, String)]): DataFrame = ms.foldLeft(df) { case (d, (a, b)) =>
+      d.select(col("wc"), applyMerge(col("s"), a, b).as("s"))
+    }
+    var from = base
     try {
-      // Each round's symbolization is the cached base plus the merges
-      // learned so far, re-applied as a narrow per-row fold — NOT a
-      // per-round persist+count chain: materializing every round cost
-      // one extra eager job + a persisted copy per merge (measured 4.6 s
-      // wall / 0.8 s cpu at sf0.1 — pure serial-job latency on a
-      // vocab-bounded table), while re-folding k tiny column lambdas
-      // over the one cached vocab scan is map-side-only work. One job
-      // per round (the argmax collect) remains — the algorithmic floor.
+      // Each round's symbolization is the cached base (or the last
+      // checkpoint) plus the merges learned since, re-applied as a
+      // narrow per-row fold — NOT a per-round persist+count chain:
+      // materializing every round cost one extra eager job + a
+      // persisted copy per merge (measured 4.6 s wall / 0.8 s cpu at
+      // sf0.1 — pure serial-job latency on a vocab-bounded table),
+      // while re-folding k tiny column lambdas over one cached scan is
+      // map-side-only work. One job per round (the argmax collect)
+      // remains — the algorithmic floor — plus one checkpoint job per
+      // MaxFoldDepth merges.
       var continue = true
       while (continue && merges.size < nMerges) {
-        val symbolized = merges.foldLeft(base) { case (df, (a, b)) =>
-          df.select(col("wc"), applyMerge(col("s"), a, b).as("s"))
+        if (merges.nonEmpty && merges.size % MaxFoldDepth == 0) {
+          val cut = Rounds.checkpoint(fold(from, merges.takeRight(MaxFoldDepth).toSeq)).df
+          if (from ne base) Rounds.release(from)
+          from = cut
         }
-        val top = pairCounts(symbolized)
+        val top = pairCounts(fold(from, merges.takeRight(merges.size % MaxFoldDepth).toSeq))
           .orderBy(col("freq").desc, col("a"), col("b")).limit(1).collect()
         if (top.isEmpty) continue = false
         else merges += ((top(0).getString(0), top(0).getString(1)))
       }
       merges.toList
-    } finally { base.unpersist(false); () }
+    } finally {
+      if (from ne base) Rounds.release(from)
+      base.unpersist(false)
+    }
   }
 
   /** Tokenize words with a learned merge list (applied in order) —

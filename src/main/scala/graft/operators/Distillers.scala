@@ -285,27 +285,14 @@ object Distillers {
     * piped ISSN string against a (small, broadcast) issn → source
     * lookup, keeping the match for the EARLIEST ISSN in the pub's own
     * list — adds `lookup_display_name` / `lookup_host_org` columns.
-    * Each pub row is read once: tagged with a per-row id and carried
-    * whole as a struct, it is exploded to (pos, issn) pairs
-    * (posexplode_outer, so a NULL list keeps one row), left-joined to
-    * the broadcast lookup and folded back by one aggregate on the row
-    * id. That aggregate's exchange is the plan's only shuffle. Every
-    * input row comes out once, each with its own list's match, also
-    * when two rows share a pub id or have none.
+    * The pubs run through [[Rialto.firstListHit]]: each row is read
+    * once, and every input row comes out once with its own list's
+    * match.
     */
   def joinIssnSource(pubs: DataFrame, issnsCol: String, lookup: DataFrame): DataFrame = {
     val src = lookup.select(col("issn").as("__hit"),
       struct(col("display_name"), col("host_organization_name")).as("__src"))
-    // the id is taken before the explode: a generator in the same
-    // select would put the projection, and so a fresh id, above it
-    pubs
-      .select(monotonically_increasing_id().as("__row"), struct(pubs.columns.map(col): _*).as("__pub"),
-        split(col(issnsCol), "\\|").as("__issns"))
-      .select(col("__row"), col("__pub"), posexplode_outer(col("__issns")).as(Seq("__pos", "__issn")))
-      .join(broadcast(src), col("__issn") === col("__hit"), "left")
-      .groupBy("__row")
-      .agg(first(col("__pub")).as("__pub"),
-        min_by(col("__src"), when(col("__hit").isNotNull, col("__pos"))).as("__src"))
+    Rialto.firstListHit(pubs, split(col(issnsCol), "\\|"), src, col("__src"), "__src")
       .select(col("__pub.*"),
         col("__src.display_name").as("lookup_display_name"),
         col("__src.host_organization_name").as("lookup_host_org"))

@@ -338,9 +338,8 @@ object DomainQueries {
         .agg(bool_or(col("academic")).as("school_academic"))
         .withColumn("academic_authored", max(col("school_academic")).over(Window.partitionBy("pub_id")))
       // no distinct() of the (pub, part) links: bool_or ignores repeats
-      val federal = t.lineitem.select(col("l_orderkey").as("pub_id"), col("l_partkey"))
-        .join(broadcast(t.part), col("p_partkey") === col("l_partkey"))
-        .groupBy("pub_id").agg(bool_or(col("p_size") > 25).as("federally_funded"))
+      val federal = Reports.federallyFunded(
+        t.lineitem.select(col("l_orderkey").as("pub_id"), col("l_partkey").as("funder_id")), funders(t))
       pas.join(federal, Seq("pub_id"), "left")
         .groupBy("school")
         .agg(

@@ -29,18 +29,25 @@ object Layout {
     // without being one), so this matches the oracle's integer `//`.
     ((c.cast("long") * (1L << bits)) / (maxC.cast("long") + 1L)).cast("long")
 
-  /** Attach the z-value of (xCol, yCol) as `z`, both keys normalized
+  /** `df` plus `out` = `curve` of (xCol, yCol), both keys normalized
     * to `bits` by their own max (computed in one tiny agg and
     * broadcast — the corpus is not shuffled for it).
     */
-  def withZ(df: DataFrame, xCol: String, yCol: String, bits: Int): DataFrame = {
+  private def withCurve(df: DataFrame, xCol: String, yCol: String, bits: Int, out: String)(
+      curve: (Column, Column, Int) => Column): DataFrame = {
     val m = df.agg(max(col(xCol)).as("__xm"), max(col(yCol)).as("__ym"))
     df.crossJoin(broadcast(m))
-      .withColumn("z", ZOrder2(
+      .withColumn(out, curve(
         scaleTo(col(xCol), col("__xm"), bits),
         scaleTo(col(yCol), col("__ym"), bits), bits))
       .drop("__xm", "__ym")
   }
+
+  /** Attach the z-value of (xCol, yCol) as `z`, both keys normalized
+    * to `bits` by their own max.
+    */
+  def withZ(df: DataFrame, xCol: String, yCol: String, bits: Int): DataFrame =
+    withCurve(df, xCol, yCol, bits, "z")(ZOrder2(_, _, _))
 
   /** Z-order clustered layout: range-partition on z (sampled bounds,
     * one exchange) and sort within partitions — the shape to write
@@ -59,14 +66,8 @@ object Layout {
     * boxes than the Morton interleave and min-max pruning discards
     * more files (see plans.Hilbert2).
     */
-  def withH(df: DataFrame, xCol: String, yCol: String, bits: Int): DataFrame = {
-    val m = df.agg(max(col(xCol)).as("__xm"), max(col(yCol)).as("__ym"))
-    df.crossJoin(broadcast(m))
-      .withColumn("h", Hilbert2(
-        scaleTo(col(xCol), col("__xm"), bits),
-        scaleTo(col(yCol), col("__ym"), bits), bits))
-      .drop("__xm", "__ym")
-  }
+  def withH(df: DataFrame, xCol: String, yCol: String, bits: Int): DataFrame =
+    withCurve(df, xCol, yCol, bits, "h")(Hilbert2(_, _, _))
 
   /** Deterministic shard id in [0, nShards): md5 of (id ":" seed) —
     * the house engine-portable hash (Sampling.md5Bucket, conv ↔
@@ -133,8 +134,7 @@ object Layout {
       boxes: DataFrame, level: Int): DataFrame = {
     val cells = 1L << level
     val m = points.agg(max(col(pxCol)).as("__xm"), max(col(pyCol)).as("__ym"))
-    def cellOf(c: Column, maxC: Column): Column =
-      ((c.cast("long") * cells) / (maxC.cast("long") + 1L)).cast("long")
+    def cellOf(c: Column, maxC: Column): Column = scaleTo(c, maxC, level)
     // Box cover: every (cx, cy) cell the rectangle intersects. Bounds
     // clamp to the grid (a box edge past the max still covers the
     // last cell, not a phantom one).

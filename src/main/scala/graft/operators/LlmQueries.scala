@@ -59,8 +59,7 @@ object LlmQueries {
         .select(
           col("doc_id"),
           size(col("__ws")).cast("long").as("n_tokens"),
-          aggregate(col("__ws"), lit(0L),
-            (acc, w) => acc + ceil(length(w) / 4.0).cast("long")).as("bpe_est"))
+          TextAnalysis.bpeTokenEstimate(col("__ws")).as("bpe_est"))
     },
 
     // #40b tokenizer fertility per language: subword tokens per word
@@ -73,8 +72,7 @@ object LlmQueries {
           length(col("text")).cast("long").as("chars"))
         .select(col("lang"),
           size(col("__ws")).cast("long").as("wtoks"),
-          aggregate(col("__ws"), lit(0L),
-            (acc, w) => acc + ceil(length(w) / 4.0).cast("long")).as("btoks"),
+          TextAnalysis.bpeTokenEstimate(col("__ws")).as("btoks"),
           col("chars"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("wtoks").as("n_words"),
@@ -132,9 +130,8 @@ object LlmQueries {
 
     // #39 quality scoring (Gopher-style gates).
     "q_quality_score" -> { (s, dir) =>
-      // one tokenization for all four signals: the Column-inline forms
-      // (tokenCount / meanTokenLen / stopwordHits / gopherQuality) each
-      // re-split the text — 8 splits per row fused to 1, same values
+      // one tokenization for all four signals: Column-inline forms over
+      // the text (tokenCount, stopwordHits) would each re-split it
       val ws = TextAnalysis.tokenize(col("text"))
       Tables(s, dir).documents
         .select(col("doc_id"), ws.as("__ws"))
@@ -332,8 +329,7 @@ object LlmQueries {
         Tables(s, dir).documents
           .select(TextAnalysis.tokenize(col("text")).as("__ws"))
           .select(size(col("__ws")).cast("long").as("__wtoks"),
-            aggregate(col("__ws"), lit(0L),
-              (acc, w) => acc + ceil(length(w) / 4.0).cast("long")).as("__btoks")),
+            TextAnalysis.bpeTokenEstimate(col("__ws")).as("__btoks")),
         col("__wtoks"), col("__btoks"))
     },
 

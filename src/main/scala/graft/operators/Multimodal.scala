@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (SURVEY.md §2 #42): media as opaque
-  * binary columns plus a typed metadata struct, with decode /
-  * feature-extraction running per-partition.
+  * binary columns, with decode / feature-extraction running
+  * per-partition.
   *
   * IMAGE decode is REAL: javax.imageio ships PNG/JPEG codecs with the
   * JDK, so [[decodeImages]] reads true pixel data (proven by the
@@ -29,17 +29,6 @@ object Multimodal {
   // JVM-wide switch moves the cache to memory; blobs here are already
   // byte arrays, so nothing is lost.
   javax.imageio.ImageIO.setUseCache(false)
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("content", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("format", StringType, nullable = true)
-    )), nullable = true)
-  ))
 
   /** REAL per-partition feature extraction over (media_id, content)
     * rows, routed by container magic bytes — the distributed shape of

@@ -162,15 +162,10 @@ object Rialto {
     * cost > 0 hits.
     *
     * Engine shape: the dataset (~20k rows in the reference) flattens
-    * in one explode to (issn, year, cost) and broadcasts. Each pub row
-    * is read once: tagged with a per-row id and carried whole as a
-    * struct, it is exploded to (pos, issn) pairs (posexplode_outer, so
-    * a NULL or empty list keeps one row), left-joined to the dataset
-    * and folded back by one aggregate on the row id, where min_by(pos)
-    * over the matched pairs picks the cost. Every input row comes out
-    * once, each with its own list's result, also when two rows share a
-    * pub id or have none. Adds an `apc_dataset` column; `lookup` needs
-    * columns issn_1, issn_2, apc_year, apc_usd.
+    * in one explode to (issn, year, cost) and broadcasts; the pubs run
+    * through [[firstListHit]] with the pub year as the second join key.
+    * Adds an `apc_dataset` column; `lookup` needs columns issn_1,
+    * issn_2, apc_year, apc_usd.
     */
   def apcDatasetLookup(pubs: DataFrame, issnsCol: String, yearCol: String,
       lookup: DataFrame): DataFrame = {
@@ -178,17 +173,35 @@ object Rialto {
       .select(explode(array(col("issn_1"), col("issn_2"))).as("__hit"),
         col("apc_year").as("__hit_year"), col("apc_usd").as("__usd"))
       .filter(col("__usd").isNotNull && col("__usd") > 0)
+    firstListHit(pubs, col(issnsCol), flat, col("__usd"), "apc_dataset",
+      Seq(col(yearCol).as("__y")), Some(col("__y") === col("__hit_year")))
+      .select(col("__pub.*"), col("apc_dataset"))
+  }
+
+  /** The one-pass list lookup behind [[apcDatasetLookup]] and
+    * [[Distillers.joinIssnSource]]. Each pub row is read once: tagged
+    * with a per-row id and carried whole as the struct `__pub`, it is
+    * exploded to (pos, element) pairs of `list` (posexplode_outer, so
+    * a NULL or empty list keeps one row), left-joined to the broadcast
+    * `hits` on element = `__hit` (and `on`, over the `carry` columns
+    * taken next to the list) and folded back by one aggregate on the
+    * row id, whose exchange is the plan's only shuffle. `out` is the
+    * `value` of the hit at the earliest matched position, NULL when
+    * none matched. Every input row comes out once, each with its own
+    * list's result, also when two rows share a pub id or have none.
+    */
+  private[operators] def firstListHit(pubs: DataFrame, list: Column, hits: DataFrame,
+      value: Column, out: String, carry: Seq[Column] = Nil, on: Option[Column] = None): DataFrame = {
     // the id is taken before the explode: a generator in the same
     // select would put the projection, and so a fresh id, above it
-    val hits = pubs
-      .select(monotonically_increasing_id().as("__row"), struct(pubs.columns.map(col): _*).as("__pub"),
-        col(yearCol).as("__y"), col(issnsCol).as("__issns"))
-      .select(col("__row"), col("__pub"), col("__y"),
-        posexplode_outer(col("__issns")).as(Seq("__pos", "__issn")))
-      .join(broadcast(flat), col("__issn") === col("__hit") && col("__y") === col("__hit_year"), "left")
-    hits.groupBy("__row")
+    val tagged = pubs.select(Seq(monotonically_increasing_id().as("__row"),
+      struct(pubs.columns.map(col): _*).as("__pub")) ++ carry :+ list.as("__issns"): _*)
+    tagged
+      .select(tagged.columns.init.map(col).toSeq :+
+        posexplode_outer(col("__issns")).as(Seq("__pos", "__issn")): _*)
+      .join(broadcast(hits), on.foldLeft(col("__issn") === col("__hit"))(_ && _), "left")
+      .groupBy("__row")
       .agg(first(col("__pub")).as("__pub"),
-        min_by(col("__usd"), when(col("__hit").isNotNull, col("__pos"))).as("apc_dataset"))
-      .select(col("__pub.*"), col("apc_dataset"))
+        min_by(value, when(col("__hit").isNotNull, col("__pos"))).as(out))
   }
 }

@@ -186,8 +186,9 @@ object TextDedup {
 
   /** MinHash signature: `h` permutations approximated by seeded
     * xxhash64. Uses the native codegen expression (graft.plans
-    * .MinHashSig) — the composed HOF form below is semantically
-    * identical but ~30x slower interpreted, kept for reference/tests.
+    * .MinHashSig); the composed HOF form the specs compare it against
+    * (`HofOracles.minhashSignatureHof` under src/test) is bit-identical
+    * but ~30x slower interpreted.
     */
   def minhashSignature(shingles: Column, h: Int): Column =
     graft.plans.MinHashSig(shingles, h)
@@ -196,19 +197,12 @@ object TextDedup {
     * the per-chunk building block of [[mergeSignatures]]; identical to
     * the signature of the md5 family in [[minhashNearDupsPortable]]. Native
     * expression (graft.plans.PortableMinHashSig) — the interpreted-HOF
-    * form ([[portableSignatureHof]], bit-identical, spec-pinned) pays
-    * a concat + full hex encode + substring + array per (shingle, i).
+    * form the specs pin it to (`HofOracles.portableSignatureHof` under
+    * src/test, the same formula the DuckDB oracles inline) pays a
+    * concat + full hex encode + substring + array per (shingle, i).
     */
   def portableSignature(shingles: Column, h: Int): Column =
     graft.plans.PortableMinHashSig(shingles, h)
-
-  /** Reference HOF formulation of [[portableSignature]] (bit-identical;
-    * this is also exactly what the DuckDB oracles inline).
-    */
-  def portableSignatureHof(shingles: Column, h: Int, saltPrefix: String = ""): Column =
-    transform(sequence(lit(0), lit(h - 1)), i =>
-      array_min(transform(shingles, s =>
-        substring(md5(concat(lit(saltPrefix), s, lit(":"), i.cast("string"))), 1, 16))))
 
   /** Mergeable MinHash maintenance: a signature is an elementwise
     * minimum, so sig(A ∪ B) = elementwise_min(sig(A), sig(B)) — an
@@ -230,13 +224,6 @@ object TextDedup {
       .groupBy(idCol)
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
         x => x.getField("v")).as(sigCol))
-
-  /** Reference HOF formulation of minhashSignature (bit-identical). */
-  def minhashSignatureHof(shingles: Column, h: Int): Column =
-    transform(
-      sequence(lit(0), lit(h - 1)),
-      i => array_min(transform(shingles, s => xxhash64(s, i)))
-    )
 
   /** The hash family of one MinHash-LSH run; it picks the signature and
     * the band key together. [[XxHash]] is the performance path (native
@@ -745,25 +732,10 @@ object TextDedup {
     * xxhash64) is positive. Token hashes are computed once, then 64
     * fixed-shift votes run over the hash array (shift amounts must be
     * Scala ints, hence the unrolled loop — still one codegen'd
-    * projection).
+    * projection). `HofOracles.simhashBitsHof` (src/test) is the
+    * bit-identical interpreted-HOF form, ~60x slower.
     */
   def simhashBits(tokens: Column): Column = graft.plans.SimHashBits(tokens)
-
-  /** Reference HOF formulation of simhashBits (bit-identical, ~60x
-    * slower: the hash transform is duplicated into all 64 bit
-    * expressions).
-    */
-  def simhashBitsHof(tokens: Column): Column = {
-    val hs = transform(tokens, t => xxhash64(t))
-    array((0 until 64).map { i =>
-      val vote = aggregate(
-        hs,
-        lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)
-      )
-      when(vote > 0, 1L).otherwise(0L)
-    }: _*)
-  }
 
   /** Hamming distance between two equal-length bit arrays. */
   def hamming(a: Column, b: Column): Column =

@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality validation — the Spark form of
-  * /root/reference/rialto_airflow/validate.py: cohort-level coverage
-  * percentages ("X% of faculty have ORCIDs") and forbidden-combination
-  * counts ("PhD students at SLAC should be 0"), computed as one
+  * rialto-airflow's validate.py: its cohort-level coverage
+  * percentages ("X% of faculty have ORCIDs"), computed as one
   * aggregation pass instead of pandas slicing.
   */
 object Validation {
@@ -21,8 +20,4 @@ object Validation {
         count(field).as("n_present"),
         round(count(field) * lit(100.0) / count(lit(1)), 1).as("pct_present")
       )
-
-  /** Count of rows violating a forbidden predicate (expected 0). */
-  def forbiddenCount(df: DataFrame, predicate: Column): DataFrame =
-    df.filter(predicate).agg(count(lit(1)).as("violations"))
 }

@@ -15,17 +15,11 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   /** Dot product of two float/double array columns (double math, left
-    * fold — deterministic order). Native codegen expression; `dotHof`
-    * is the bit-identical composed form kept for reference/tests.
+    * fold — deterministic order). Native codegen expression;
+    * `HofOracles.dotHof` (src/test) is the bit-identical composed form
+    * the specs compare it against.
     */
   def dot(a: Column, b: Column): Column = graft.plans.VecDot(a, b)
-
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v
-    )
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 

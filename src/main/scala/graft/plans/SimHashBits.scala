@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * then votes ±1 into all 64 bit counters — one pass, one codegen'd
   * loop. The composed form duplicated the token-hash transform into
   * each of the 64 bit expressions (tokens re-split and re-hashed 64x,
-  * measured 12 s at sf0.1 vs <1 s native). Bit-identical to
-  * TextDedup.simhashBitsHof (spec-enforced).
+  * measured 12 s at sf0.1 vs <1 s native). Bit-identical to the
+  * interpreted-HOF form `HofOracles.simhashBitsHof` under src/test
+  * (PlansSpec).
   */
 case class SimHashBits(child: Expression) extends UnaryExpression {
 

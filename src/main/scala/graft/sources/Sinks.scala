@@ -202,28 +202,18 @@ object Sinks {
 
   /** Z-order clustering write: sort by the bit-interleaved value of
     * two integer columns so range predicates on EITHER column touch
-    * few files (parquet min/max skipping). Interleave is an unrolled
-    * fixed-shift expression — pure codegen.
-    */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String, files: Int): Unit =
-    df.repartitionByRange(files, zValue(org.apache.spark.sql.functions.col(colA),
-        org.apache.spark.sql.functions.col(colB)))
-      .sortWithinPartitions(zValue(org.apache.spark.sql.functions.col(colA),
-        org.apache.spark.sql.functions.col(colB)))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** 62-bit Z-value: interleave the low 31 bits of two long columns.
+    * few files (parquet min/max skipping). The z-value is
+    * `plans.ZOrder2` over the low 31 bits of each key (cast to long):
     * 31 (not 32) bits per column keeps the result clear of the long
     * sign bit, so z-values sort monotonically for keys in [0, 2^31);
     * larger keys wrap into the same range (clustering degrades but
     * ordering stays non-negative and consistent).
     */
-  def zValue(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{shiftleft, shiftright}
-    (0 until 31).map { i =>
-      val abit = shiftleft(shiftright(a.cast("long"), i).bitwiseAND(1L), 2 * i)
-      val bbit = shiftleft(shiftright(b.cast("long"), i).bitwiseAND(1L), 2 * i + 1)
-      abit + bbit
-    }.reduce(_ + _)
+  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String, files: Int): Unit = {
+    import org.apache.spark.sql.functions.col
+    val z = graft.plans.ZOrder2(col(colA).cast("long"), col(colB).cast("long"), 31)
+    df.repartitionByRange(files, z)
+      .sortWithinPartitions(z)
+      .write.mode(SaveMode.Overwrite).parquet(path)
   }
 }

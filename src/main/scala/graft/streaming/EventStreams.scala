@@ -106,26 +106,6 @@ object EventStreams {
       events.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
     }
 
-  /** Snapshot sink — the reference marks a completed harvest snapshot
-    * with a snapshot.json in the snapshot dir (README workflow step
-    * 10). Streaming equivalent: every micro-batch lands as parquet
-    * under an epoch directory, then a `_SNAPSHOT` marker commits it;
-    * consumers only read marked epochs.
-    */
-  def snapshotSink(stream: DataFrame, baseDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        val dir = s"$baseDir/epoch=$epochId"
-        batch.write.mode("overwrite").parquet(dir)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/_SNAPSHOT"),
-          s"""{"epoch": $epochId, "rows": ${batch.count()}}"""
-        )
-        ()
-      }
-      .start()
-
   final case class Event(user_id: Long, ts: Timestamp, event_type: String, value: Double)
   final case class SessionSummary(user_id: Long, start: Timestamp, end: Timestamp, n_events: Long, total_value: Double)
   // public: the state encoder's generated (Janino) serializer needs

@@ -82,4 +82,63 @@ class BpeSpec extends SparkSpec {
     // e-s (9) wins round 1, then es-t (9), then lexicographic among 7s: (l,o)
     assert(merges == Seq(("e", "s"), ("es", "t"), ("l", "o")))
   }
+
+  test("learnMerges past MaxFoldDepth matches plain-Scala BPE with bounded fold depth") {
+    val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L),
+      ("abcabc", 4L), ("abcdefghijklmnopqrstuvwxyz", 1L))
+    val nMerges = 20
+    assert(Bpe.MaxFoldDepth < nMerges - 1, "the spec must learn enough merges to pass a checkpoint")
+    // per SQL execution: the aggregate() lambdas its analyzed plan nests
+    val depths = scala.collection.mutable.ListBuffer.empty[(String, Int)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = {
+        val n = qe.analyzed.collect { case p =>
+          p.expressions.map(_.collect {
+            case _: org.apache.spark.sql.catalyst.expressions.ArrayAggregate => 1
+          }.sum).sum
+        }.sum
+        depths.synchronized { depths += funcName -> n }
+      }
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val merges = try {
+      val m = Bpe.learnMerges(vocab.toDF("w", "wc"), "w", "wc", nMerges)
+      // listener delivery is async: wait for every round's argmax collect
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      def collects = depths.synchronized(depths.count(_._1 == "collect"))
+      while (collects < nMerges && System.nanoTime() < deadline) Thread.sleep(50)
+      m
+    } finally spark.listenerManager.unregister(listener)
+    assert(merges == plainBpe(vocab, nMerges))
+    val seen = depths.synchronized(depths.toList)
+    assert(seen.count(_._1 == "collect") == nMerges)
+    assert(seen.map(_._2).max <= Bpe.MaxFoldDepth, seen.toString)
+  }
+
+  /** Textbook BPE on a (word, count) list: greedy left-to-right merge
+    * application, argmax pair by (freq desc, a asc, b asc).
+    */
+  private def plainBpe(vocab: Seq[(String, Long)], n: Int): Seq[(String, String)] = {
+    def merge(syms: Vector[String], a: String, b: String): Vector[String] =
+      syms.foldLeft(Vector.empty[String]) { (acc, x) =>
+        if (acc.nonEmpty && acc.last == a && x == b) acc.init :+ (a + b) else acc :+ x
+      }
+    var words = vocab.map { case (w, c) => (w.map(_.toString).toVector, c) }
+    val out = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    var done = false
+    while (!done && out.size < n) {
+      val freq = words.flatMap { case (s, c) => s.zip(s.tail).map(_ -> c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (freq.isEmpty) done = true
+      else {
+        val (a, b) = freq.toSeq.minBy { case ((a, b), f) => (-f, a, b) }._1
+        out += ((a, b))
+        words = words.map { case (s, c) => (merge(s, a, b), c) }
+      }
+    }
+    out.toList
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Salt, VectorOps}
+import graft.operators.Salt
 
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -11,7 +11,7 @@ class ExtensionsSpec extends SparkSpec {
     // apply the rule directly to the analyzed plan (the shared session
     // was built without extensions; rule injection is exercised here)
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(10)
-    val df = e.select(VectorOps.dotHof(col("embedding"), col("embedding")).as("d"))
+    val df = e.select(HofOracles.dotHof(col("embedding"), col("embedding")).as("d"))
     val rewritten = graft.plans.RewriteDotProduct(df.queryExecution.analyzed)
     assert(rewritten.expressions.exists(_.exists(_.isInstanceOf[graft.plans.VecDot])))
     assert(df.count() == 10)

@@ -17,7 +17,7 @@ class PlansSpec extends SparkSpec {
       .filter(size(col("sh")) > 0)
     val diff = docs.select(
       TextDedup.minhashSignature(col("sh"), 64).as("fast"),
-      TextDedup.minhashSignatureHof(col("sh"), 64).as("ref")
+      HofOracles.minhashSignatureHof(col("sh"), 64).as("ref")
     ).filter(col("fast") =!= col("ref")).count()
     assert(diff == 0)
   }
@@ -28,9 +28,9 @@ class PlansSpec extends SparkSpec {
       .filter(size(col("sh")) > 0)
     val diff = docs.select(
       TextDedup.portableSignature(col("sh"), 16).as("fast"),
-      TextDedup.portableSignatureHof(col("sh"), 16).as("ref"),
+      HofOracles.portableSignatureHof(col("sh"), 16).as("ref"),
       graft.plans.PortableMinHashSig(col("sh"), 8, "cr2:").as("fast_s"),
-      TextDedup.portableSignatureHof(col("sh"), 8, "cr2:").as("ref_s")
+      HofOracles.portableSignatureHof(col("sh"), 8, "cr2:").as("ref_s")
     ).filter(col("fast") =!= col("ref") || col("fast_s") =!= col("ref_s")).count()
     assert(diff == 0)
     // edge semantics, HOF-equal on the full domain: NULL array -> h
@@ -44,13 +44,13 @@ class PlansSpec extends SparkSpec {
         | (array('x', CAST(NULL AS string), 'y')) t(sh)""".stripMargin)
     val bad = edge.select(
       TextDedup.portableSignature(col("sh"), 4).as("fast"),
-      TextDedup.portableSignatureHof(col("sh"), 4).as("ref"))
+      HofOracles.portableSignatureHof(col("sh"), 4).as("ref"))
       .filter(!(col("fast") <=> col("ref"))).count()
     assert(bad == 0)
     // interpreted eval (local relation, no whole-stage) agrees too
     val local = Seq(Seq("a", "bb", "ccc")).toDF("sh").select(
       TextDedup.portableSignature(col("sh"), 4).as("fast"),
-      TextDedup.portableSignatureHof(col("sh"), 4).as("ref"))
+      HofOracles.portableSignatureHof(col("sh"), 4).as("ref"))
     assert(local.filter(col("fast") =!= col("ref")).count() == 0)
   }
 
@@ -64,9 +64,9 @@ class PlansSpec extends SparkSpec {
     // itself native since round 13)
     val both = docs.select(
       graft.plans.ChunkedMinHashSig(col("sh"), 8).as("cs"),
-      when(size(loRef) > 0, TextDedup.portableSignatureHof(loRef, 8)).as("lo_ref"),
-      when(size(hiRef) > 0, TextDedup.portableSignatureHof(hiRef, 8)).as("hi_ref"),
-      TextDedup.portableSignatureHof(col("sh"), 8).as("full_ref"))
+      when(size(loRef) > 0, HofOracles.portableSignatureHof(loRef, 8)).as("lo_ref"),
+      when(size(hiRef) > 0, HofOracles.portableSignatureHof(hiRef, 8)).as("hi_ref"),
+      HofOracles.portableSignatureHof(col("sh"), 8).as("full_ref"))
     assert(both.filter(
       !(col("cs.lo") <=> col("lo_ref")) ||
       !(col("cs.hi") <=> col("hi_ref")) ||
@@ -86,7 +86,7 @@ class PlansSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val diff = docs.select(
       TextAnalysis.wordNgrams(col("text"), 3).as("fast"),
-      TextAnalysis.wordNgramsHof(col("text"), 3).as("ref")
+      HofOracles.wordNgramsHof(col("text"), 3).as("ref")
     ).filter(col("fast") =!= col("ref")).count()
     assert(diff == 0)
   }
@@ -98,7 +98,7 @@ class PlansSpec extends SparkSpec {
       .limit(500)
     val diff = pairs.select(
       VectorOps.dot(col("va"), col("vb")).as("fast"),
-      VectorOps.dotHof(col("va"), col("vb")).as("ref")
+      HofOracles.dotHof(col("va"), col("vb")).as("ref")
     ).filter(col("fast") =!= col("ref")).count()
     assert(diff == 0)
   }
@@ -147,7 +147,7 @@ class PlansSpec extends SparkSpec {
     val toks = docs.select(TextAnalysis.tokenize(col("text")).as("t"))
     val diff = toks.select(
       TextDedup.simhashBits(col("t")).as("fast"),
-      TextDedup.simhashBitsHof(col("t")).as("ref")
+      HofOracles.simhashBitsHof(col("t")).as("ref")
     ).filter(col("fast") =!= col("ref")).count()
     assert(diff == 0)
   }
@@ -157,7 +157,7 @@ class PlansSpec extends SparkSpec {
     val canon = docs.select(
       array_join(TextAnalysis.tokenize(col("text")), " ").as("canon"),
       TextAnalysis.rebuildInvertedIndex(TextAnalysis.buildInvertedIndex(col("text"))).as("nat"),
-      TextAnalysis.rebuildInvertedIndexHof(TextAnalysis.buildInvertedIndexHof(col("text"))).as("hof")
+      HofOracles.rebuildInvertedIndexHof(HofOracles.buildInvertedIndexHof(col("text"))).as("hof")
     )
     assert(canon.filter(col("nat") =!= col("canon") || col("hof") =!= col("canon")).count() == 0)
   }

@@ -86,14 +86,6 @@ class RialtoSpec extends SparkSpec {
     assert(r3.isNullAt(0))
   }
 
-  test("forbiddenCount counts rule violations (expected-zero checks)") {
-    val df = Seq(("phd", "SLAC"), ("phd", "Eng"), ("faculty", "SLAC")).toDF("role", "school")
-    val n = graft.operators.Validation
-      .forbiddenCount(df, col("role") === "phd" && col("school") === "SLAC")
-      .collect()(0).getLong(0)
-    assert(n == 1L)
-  }
-
   test("keepNewest keeps exactly one deterministic row per key") {
     val df = Seq((1L, 5, "old"), (1L, 9, "new"), (2L, 1, "only")).toDF("k", "ver", "tag")
     val out = keepNewest(df, Seq("k"), Seq(col("ver")))

@@ -107,8 +107,11 @@ class SinksIvfSpec extends SparkSpec {
 
   test("zValue interleaves bits; z-ordered write clusters both columns") {
     import spark.implicits._
+    // the z-value writeZOrdered sorts by: ZOrder2 over the keys cast to
+    // long, 31 bits each
+    def zValue(a: String, b: String) = graft.plans.ZOrder2(col(a).cast("long"), col(b).cast("long"), 31)
     val z = Seq((1L, 0L), (0L, 1L), (3L, 3L)).toDF("a", "b")
-      .select(Sinks.zValue(col("a"), col("b")).as("z")).collect().map(_.getLong(0))
+      .select(zValue("a", "b").as("z")).collect().map(_.getLong(0))
     assert(z(0) == 1L)  // a bit 0 -> position 0
     assert(z(1) == 2L)  // b bit 0 -> position 1
     assert(z(2) == 15L) // both low 2 bits set -> 0b1111
@@ -116,9 +119,15 @@ class SinksIvfSpec extends SparkSpec {
     // monotone (the 32-bit interleave put b's bit 31 at position 63)
     val max31 = (1L << 31) - 1
     val big = Seq((0L, max31), (max31, max31)).toDF("a", "b")
-      .select(Sinks.zValue(col("a"), col("b")).as("z")).collect().map(_.getLong(0))
+      .select(zValue("a", "b").as("z")).collect().map(_.getLong(0))
     assert(big.forall(_ >= 0L))
     assert(big(1) == (1L << 62) - 1)
+    // one output file holds the rows in ascending z order
+    val small = Files.createTempDirectory("zord").toString + "/s"
+    Sinks.writeZOrdered(Seq((max31, max31), (3L, 3L), (0L, max31), (0L, 1L), (1L, 0L)).toDF("a", "b"),
+      small, "a", "b", files = 1)
+    assert(spark.read.parquet(small).as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 0L), (0L, 1L), (3L, 3L), (0L, max31), (max31, max31)))
     val out = Files.createTempDirectory("zord").toString + "/t"
     Sinks.writeZOrdered(
       spark.read.parquet(s"$sfDir/lineitem.parquet").select("l_partkey", "l_suppkey", "l_quantity"),

@@ -141,20 +141,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("snapshotSink writes epoch parquet + _SNAPSHOT markers") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString
-    val in = MemoryStream[Event]
-    in.addData(Event(1, ts(0), "a", 1.0), Event(2, ts(1), "b", 2.0))
-    val q = EventStreams.snapshotSink(in.toDF(), dir)
-    try q.processAllAvailable() finally q.stop()
-    val epochs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("epoch="))
-    assert(epochs.nonEmpty)
-    val marked = epochs.filter(e => new java.io.File(e, "_SNAPSHOT").exists())
-    assert(marked.length == epochs.length)
-    assert(spark.read.parquet(marked.head.getAbsolutePath).count() == 2)
-  }
-
   test("left-outer interval join emits unmatched purchases with nulls") {
     implicit val sqlCtx = spark.sqlContext
     val li = MemoryStream[(Long, Long, java.sql.Timestamp)]

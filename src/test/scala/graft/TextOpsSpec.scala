@@ -16,7 +16,7 @@ class TextOpsSpec extends SparkSpec {
     val r = df.select(
       TextAnalysis.tokenCount(col("text")).as("n"),
       TextAnalysis.stopwordHits(col("text"), TextAnalysis.langProfiles("en")).as("s"),
-      TextAnalysis.bpeTokenEstimate(col("text")).as("b")
+      TextAnalysis.bpeTokenEstimate(TextAnalysis.tokenize(col("text"))).as("b")
     ).collect()(0)
     assert(r.getLong(0) == 9)
     assert(r.getLong(1) == 2) // "the" twice

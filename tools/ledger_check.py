@@ -8,6 +8,11 @@ Contract enforced:
     or absent from the driver suite (spec-only surfaces);
   - every CORRECTNESS query must be claimed by at least one SURVEY row
     (✓ or ◦) so the coverage table and the driver suite stay 1:1.
+  - every `Object.member` a SURVEY row names must resolve under src/main:
+    a `def`/`val` of that object, or for a `q_` member a query key in
+    the object's file — so deleting code cannot silently drop a listed
+    capability. `*.scala` file names and the non-graft names in
+    EXTERNAL_OBJECTS are skipped.
 
 Usage: python3 tools/ledger_check.py [CORRECTNESS_rNN.json]
 (defaults to the lexicographically-latest CORRECTNESS_r*.json in cwd)
@@ -50,6 +55,40 @@ def from_check_log(path):
                   f"absent from {path} backfilled from {drivers[-1]} "
                   f"(stale verdicts): {', '.join(sorted(backfilled))}")
     return correctness
+
+
+# Qualifiers SURVEY rows use that are not graft objects: Spark API
+# types and a module of the reference pipeline.
+EXTERNAL_OBJECTS = {"Dataset", "Scan", "SupportsAdmissionControl", "Harvest"}
+
+
+def unresolved_members(survey, src="src/main/scala"):
+    """(names checked, errors) for the `Object.member` names in SURVEY
+    table rows, resolved against the objects defined under `src`."""
+    files = {}
+    for f in glob.glob(f"{src}/**/*.scala", recursive=True):
+        text = open(f, encoding="utf-8").read()
+        for m in re.finditer(r"^\s*(?:private(?:\[\w+\])?\s+)?(?:case\s+)?object\s+(\w+)",
+                             text, re.M):
+            files.setdefault(m.group(1), []).append(text)
+    names = set()
+    for line in survey.splitlines():
+        if line.startswith("|"):
+            names |= set(re.findall(r"\b([A-Z]\w*)\.([a-z]\w*)\b", line))
+    errors, checked = [], 0
+    for obj, member in sorted(names):
+        if member == "scala" or obj in EXTERNAL_OBJECTS:
+            continue
+        checked += 1
+        if member.startswith("q_"):
+            pattern = rf'"{member}"\s*->'
+        else:
+            pattern = rf"\b(?:def|val|lazy val|var)\s+{member}\b"
+        if not any(re.search(pattern, text) for text in files.get(obj, [])):
+            errors.append(f"SURVEY names {obj}.{member} but src/main has no "
+                          f"{'query key' if member.startswith('q_') else 'def/val'} "
+                          f"{member} in object {obj}")
+    return checked, errors
 
 
 def main() -> int:
@@ -102,6 +141,9 @@ def check(cpath, correctness, survey) -> int:
         if q not in claimed:
             errors.append(f"{cpath} has {q} but no SURVEY row claims it (✓ or ◦)")
 
+    n_members, member_errors = unresolved_members(survey)
+    errors += member_errors
+
     if errors:
         print(f"LEDGER DRIFT vs {cpath}:")
         for e in errors:
@@ -109,6 +151,7 @@ def check(cpath, correctness, survey) -> int:
         return 1
     print(f"ledger consistent vs {cpath}: {len(checked)} ✓, {len(rows_only)} ◦, "
           f"{len(correctness)} driver queries, all claimed")
+    print(f"{n_members} SURVEY-named members resolve under src/main")
     return 0
 
 
